@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Cleaning, Enrich}
 import graft.sinks.ProcessingLog
@@ -10,123 +10,69 @@ import graft.sources.{FileCatalog, Readers}
   * (SURVEY.md §2 C4; reference: etl_pipeline.py:252-545
   * `process_single_day`):
   *
-  *   catalog → date filter → CSV read → clean names → merge →
-  *   source_file tag → unix-ts coercion → metadata → drop empty cols
-  *   → dedup → (sink + audit entry)
+  *   catalog → date filter → CSV read → clean names → source_file tag
+  *   → unix-ts coercion → metadata → drop empty cols → dedup
+  *   → (sink + audit entry)
   *
   * Everything up to the sink is a single lazy logical plan: Catalyst
   * sees the whole chain, so column pruning flows back into the CSV
   * scan and the dedup shuffle is the only wide stage. The reference's
-  * per-file pandas loop becomes one distributed multi-file scan when
-  * the drop is schema-homogeneous (the common case); a
-  * `heterogeneous=true` drop falls back to per-file union-by-name,
-  * which is what `pd.concat(sort=False)` did.
+  * per-file pandas loop becomes one distributed multi-file scan.
+  *
+  * Drop contract: all files of one day share one header. Spark's CSV
+  * reader takes the schema from the first file and maps every later
+  * file's columns BY POSITION, only logging a warning on a header
+  * mismatch — two files with headers `a,b` and `b,a` silently swap
+  * their values. (`enforceSchema=false` would reject the mismatch, but
+  * also rejects legitimate trailing-comma and duplicate-name headers.)
   */
 object EtlPipeline {
 
-  final case class DayResult(data: DataFrame, log: ProcessingLog.Entry)
-
-  def processDay(
+  /** The day's lazy, cleaned frame plus its (path, name) files, or
+    * `None` when the drop has no file for `date`
+    * (reference: etl_pipeline.py:326-346). */
+  def dayFrame(
       spark: SparkSession,
       dropDir: String,
       date: String,
-      tableName: String = "table_name",
-      tsColumns: Seq[String] = Seq("ts_us"),
-      tsUnit: String = "us",
-      heterogeneous: Boolean = false,
-      processedAt: Option[java.sql.Timestamp] = None,
-      maxFilesPerDay: Int = 100000): Option[DayResult] = {
-
+      processedAt: Option[java.sql.Timestamp] = None)
+      : Option[(DataFrame, Seq[(String, String)])] = {
     // capped, never unbounded (see FileCatalog.pathsForDate)
-    val files = FileCatalog.pathsForDate(spark, dropDir, date, maxFilesPerDay)
-    if (files.isEmpty) return None // reference: etl_pipeline.py:326-346
+    val files = FileCatalog.pathsForDate(spark, dropDir, date)
+    if (files.isEmpty) return None
 
-    val paths = files.map(_._1).toSeq
-    val merged =
-      if (!heterogeneous) Cleaning.cleanColumnNames(Readers.csv(spark, paths))
-      else Cleaning.unionMerge(
-        paths.map(p => Cleaning.cleanColumnNames(Readers.csv(spark, Seq(p)))))
-
+    val merged = Cleaning.cleanColumnNames(Readers.csv(spark, files.map(_._1)))
     val enriched = Enrich.addMetadata(
-      Enrich.coerceUnixTimestamps(
-        Readers.withSourceFile(merged), tsColumns, tsUnit),
+      Enrich.coerceUnixTimestamps(Readers.withSourceFile(merged), Seq("ts_us"), "us"),
       sourceDate = date, filesMergedCount = files.length.toLong,
       processedAt = processedAt)
-
-    val cleaned = Cleaning.dedupRows(Cleaning.dropEmptyColumns(enriched))
-
-    val totalRows = cleaned.count()
-    val entry = ProcessingLog.entry(
-      dateOfData = date,
-      filesProcessed = files.length.toLong,
-      filesMerged = files.length.toLong,
-      tableName = tableName,
-      totalRows = totalRows,
-      columnCount = cleaned.columns.length.toLong,
-      sourceFiles = files.map(_._2).toSeq,
-      processedAt = processedAt.getOrElse(
-        new java.sql.Timestamp(System.currentTimeMillis())))
-    Some(DayResult(cleaned, entry))
+    Some((Cleaning.dedupRows(Cleaning.dropEmptyColumns(enriched)), files))
   }
 
-  /** Single-pass day pipeline: like [[processDay]], but the row count
-    * for the audit entry is collected as an `observe` metric DURING
-    * the sink action instead of a separate `count()` job — at 100 TB
-    * the standalone count is a second full pass over the cleaned data.
-    * The sink callback runs exactly one action on the frame it's
-    * given. */
-  def processDayTo(
+  /** Runs the day's frame through `sink` and returns its audit entry.
+    *
+    * Sink contract: `sink` runs exactly one action on the frame it is
+    * given. The audit row count is an `observe` metric of that action,
+    * so the day is never counted in a pass of its own. */
+  def processDay(
       spark: SparkSession,
       dropDir: String,
       date: String,
       sink: DataFrame => Unit,
       tableName: String = "table_name",
-      tsColumns: Seq[String] = Seq("ts_us"),
-      tsUnit: String = "us",
-      heterogeneous: Boolean = false,
-      processedAt: Option[java.sql.Timestamp] = None,
-      maxFilesPerDay: Int = 100000): Option[ProcessingLog.Entry] = {
-
-    // capped, never unbounded (see FileCatalog.pathsForDate)
-    val files = FileCatalog.pathsForDate(spark, dropDir, date, maxFilesPerDay)
-    if (files.isEmpty) return None
-
-    val paths = files.map(_._1).toSeq
-    val merged =
-      if (!heterogeneous) Cleaning.cleanColumnNames(Readers.csv(spark, paths))
-      else Cleaning.unionMerge(
-        paths.map(p => Cleaning.cleanColumnNames(Readers.csv(spark, Seq(p)))))
-    val enriched = Enrich.addMetadata(
-      Enrich.coerceUnixTimestamps(
-        Readers.withSourceFile(merged), tsColumns, tsUnit),
-      sourceDate = date, filesMergedCount = files.length.toLong,
-      processedAt = processedAt)
-    val cleaned = Cleaning.dedupRows(Cleaning.dropEmptyColumns(enriched))
-
-    val obs = org.apache.spark.sql.Observation(s"etl_day_$date")
-    sink(cleaned.observe(obs, count(lit(1)).as("rows")))
-    val totalRows = obs.get("rows").asInstanceOf[Long]
-
-    Some(ProcessingLog.entry(
-      dateOfData = date,
-      filesProcessed = files.length.toLong,
-      filesMerged = files.length.toLong,
-      tableName = tableName,
-      totalRows = totalRows,
-      columnCount = cleaned.columns.length.toLong,
-      sourceFiles = files.map(_._2).toSeq,
-      processedAt = processedAt.getOrElse(
-        new java.sql.Timestamp(System.currentTimeMillis()))))
-  }
-
-  /** The reference's day-range driver loop (etl_pipeline.py:708-727). */
-  def processRange(
-      spark: SparkSession,
-      dropDir: String,
-      dates: Seq[String],
-      tableName: String = "table_name",
-      processedAt: Option[java.sql.Timestamp] = None): Seq[ProcessingLog.Entry] =
-    dates.flatMap(d =>
-      processDay(spark, dropDir, d, tableName, processedAt = processedAt)
-        .map(_.log))
+      processedAt: Option[java.sql.Timestamp] = None): Option[ProcessingLog.Entry] =
+    dayFrame(spark, dropDir, date, processedAt).map { case (cleaned, files) =>
+      val obs = Observation(s"etl_day_$date")
+      sink(cleaned.observe(obs, count(lit(1)).as("rows")))
+      ProcessingLog.entry(
+        dateOfData = date,
+        filesProcessed = files.length.toLong,
+        filesMerged = files.length.toLong,
+        tableName = tableName,
+        totalRows = obs.get("rows").asInstanceOf[Long],
+        columnCount = cleaned.columns.length.toLong,
+        sourceFiles = files.map(_._2),
+        processedAt = processedAt.getOrElse(
+          new java.sql.Timestamp(System.currentTimeMillis())))
+    }
 }

@@ -21,7 +21,9 @@ import org.apache.spark.sql.SparkSession
   * Configuration comes from the environment via [[EtlConfig]]
   * (GRAFT_DROP_DIR, GRAFT_JDBC_URL or GRAFT_DB_*, ...).
   *
-  * Exit codes: 0 ok, 2 bad usage/dates, 3 configuration/connection. */
+  * Exit codes: 0 ok (days with no files are skipped, not failed),
+  * 1 at least one day FAILED, 2 bad usage/dates, 3 configuration/
+  * connection. */
 object Main {
 
   private val usage =
@@ -113,7 +115,7 @@ object Main {
 
   /** The reference's day loop (etl_pipeline.py:708-727): per-day
     * pipeline + JDBC load + audit entry; one day's failure doesn't
-    * abort the range. */
+    * abort the range, but makes the run's exit code 1. */
   private def process(spark: SparkSession, cfg: EtlConfig,
                       start: LocalDate, end: LocalDate,
                       out: String => Unit): Int = {
@@ -122,22 +124,23 @@ object Main {
     out(s"Processing data from $start to $end")
     out(s"Will process ${days.length} day(s) of data")
     var successful = 0
+    var failed = 0
     days.foreach { day =>
       try {
         EtlPipeline.processDay(spark, cfg.dropDir, day.toString,
-            tableName = cfg.table) match {
+            sink = sinks.Sinks.writeJdbc(_, cfg.jdbc), tableName = cfg.table) match {
           case None =>
             out(s"$day: no files found, skipping")
-          case Some(res) =>
-            sinks.Sinks.writeJdbc(res.data, cfg.jdbc)
-            sinks.Sinks.writeJdbc(
-              sinks.ProcessingLog.toDf(spark, Seq(res.log)), cfg.jdbcLog)
-            out(s"$day: loaded ${res.log.total_row_count} rows " +
-              s"from ${res.log.files_processed} file(s)")
+          case Some(log) =>
+            sinks.Sinks.writeJdbc(sinks.ProcessingLog.toDf(spark, Seq(log)), cfg.jdbcLog)
+            out(s"$day: loaded ${log.total_row_count} rows " +
+              s"from ${log.files_processed} file(s)")
             successful += 1
         }
       } catch {
-        case e: Exception => out(s"$day: FAILED — ${e.getMessage}")
+        case e: Exception =>
+          out(s"$day: FAILED — ${e.getMessage}")
+          failed += 1
       }
     }
     out("=" * 50)
@@ -148,7 +151,7 @@ object Main {
       out(s"All merged data has been loaded to the '${cfg.table}' table.")
       out(s"Processing logs are available in the '${cfg.logTable}' table.")
     }
-    0
+    if (failed > 0) 1 else 0
   }
 
   def main(args: Array[String]): Unit = {

@@ -546,9 +546,9 @@ object EtlQueries {
   /** Full day pipeline on the staged drop, aggregated per event type. */
   def etlDayPipeline(s: SparkSession, dir: String): DataFrame = {
     val drop = EtlStage.stageEventsCsv(s, dir)
-    val res = EtlPipeline.processDay(s, drop, "2024-01-15",
+    val (day, _) = EtlPipeline.dayFrame(s, drop, "2024-01-15",
       processedAt = Some(fixedProcessedAt)).get
-    res.data.groupBy(col("event_type"))
+    day.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         countDistinct(col("user_id")).as("n_users"),
         dsum(col("value")).as("sum_value"),
@@ -817,9 +817,10 @@ object EtlQueries {
   /** Day-range run: one audit row per day, reference schema. */
   def processingLog(s: SparkSession, dir: String): DataFrame = {
     val drop = EtlStage.stageEventsCsv(s, dir)
-    val entries = EtlPipeline.processRange(s, drop,
-      Seq("2024-01-10", "2024-01-11", "2024-01-12"),
-      processedAt = Some(fixedProcessedAt))
+    val entries = Seq("2024-01-10", "2024-01-11", "2024-01-12").flatMap(d =>
+      EtlPipeline.processDay(s, drop, d,
+        sink = _.write.format("noop").mode("overwrite").save(),
+        processedAt = Some(fixedProcessedAt)))
     graft.sinks.ProcessingLog.toDf(s, entries)
       .select(
         date_format(col("date_of_data"), "yyyy-MM-dd").as("date_of_data"),

@@ -91,7 +91,7 @@ object SinkGates {
        |FROM events""".stripMargin
 
   // ------------------------------------------------------------- C8
-  /** Single-pass audit accounting: `processDayTo` counts the sunk rows
+  /** Single-pass audit accounting: `processDay` counts the sunk rows
     * with an `observe` metric DURING the one sink action; the audit
     * total must equal both the files on disk and the oracle's count of
     * that day. */
@@ -99,7 +99,7 @@ object SinkGates {
     import s.implicits._
     val drop = graft.EtlStage.stageEventsCsv(s, dir)
     val out = base(dir, "etl_audit")
-    val entry = graft.EtlPipeline.processDayTo(s, drop, "2024-01-15",
+    val entry = graft.EtlPipeline.processDay(s, drop, "2024-01-15",
       sink = df => df.write.mode("overwrite").parquet(out)).get
     val sunk = s.read.parquet(out).count()
     Seq(("etl_audit", entry.total_row_count, entry.total_row_count == sunk))

@@ -50,15 +50,14 @@ object Sinks {
 
   /** Chunked create-or-append load (reference: etl_pipeline.py:500-515
     * `if_exists='append'|'replace'`). */
-  def writeJdbc(df: DataFrame, cfg: JdbcConfig, overwrite: Boolean = false): Unit = {
-    val balanced =
-      if (df.rdd.getNumPartitions > cfg.numPartitions) df.coalesce(cfg.numPartitions)
-      else df
-    balanced.write.format("jdbc")
+  def writeJdbc(df: DataFrame, cfg: JdbcConfig, overwrite: Boolean = false): Unit =
+    // no partition-count guard: a coalesce without a shuffle never raises
+    // the count, and reading it through `df.rdd` would, under AQE, run the
+    // input's shuffle map stages as a job of their own before the write
+    df.coalesce(cfg.numPartitions).write.format("jdbc")
       .options(jdbcWriteOptions(cfg))
       .mode(if (overwrite) SaveMode.Overwrite else SaveMode.Append)
       .save()
-  }
 
   def writeParquet(df: DataFrame, path: String,
                    partitionBy: Seq[String] = Nil,

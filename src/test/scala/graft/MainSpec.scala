@@ -49,6 +49,24 @@ class MainSpec extends SparkSpec {
     assert(outLines.exists(_.contains("no files found")))
   }
 
+  test("a FAILED day makes the exit code 1; the other days still load") {
+    val drop = java.nio.file.Files.createTempDirectory("graft_main_fail")
+    val staged = new java.io.File(EtlStage.stageEventsCsv(spark, sf))
+    java.nio.file.Files.copy(new java.io.File(staged, "events_2024-01-15.csv").toPath,
+      drop.resolve("events_2024-01-15.csv"))
+    // a gzip stream cut off mid-file: the day's read fails
+    val gz = java.nio.file.Files.readAllBytes(
+      new java.io.File(staged, "events_2024-01-16.csv.gz").toPath)
+    java.nio.file.Files.write(drop.resolve("events_2024-01-16.csv.gz"),
+      java.util.Arrays.copyOf(gz, gz.length / 2))
+    val env = freshEnv("main_fail") + ("GRAFT_DROP_DIR" -> drop.toString)
+    val (rc, outLines) = collectOut(o => Main.run(
+      Seq("--start-date", "2024-01-15", "--end-date", "2024-01-16"), spark, env, o))
+    assert(rc == 1, outLines.mkString("\n"))
+    assert(outLines.exists(_.startsWith("2024-01-16: FAILED")))
+    assert(outLines.exists(_.contains("Successfully processed 1 out of 2 days")))
+  }
+
   test("--analyze-dates prints the drop histogram and exits 0") {
     val env = freshEnv("main_analyze")
     val (rc, outLines) = collectOut(o =>

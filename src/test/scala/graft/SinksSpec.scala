@@ -158,19 +158,30 @@ class SinksSpec extends SparkSpec {
     assert(after.toSeq == Seq(1L, 2L, 30L, 31L))
   }
 
-  test("processDayTo audits the row count from the sink pass (observe, no extra scan)") {
+  test("processDay audits the row count from the sink pass (observe, no extra scan)") {
     val drop = EtlStage.stageEventsCsv(spark, sf)
     val out = "/tmp/graft_sink/day_observed"
     // any staged date works; take one from the drop dir
     val date = new File(drop).list().filter(_.startsWith("events_"))
       .map(_.stripPrefix("events_").take(10)).sorted.head
-    val entry = EtlPipeline.processDayTo(spark, drop, date,
+    val entry = EtlPipeline.processDay(spark, drop, date,
       sink = df => df.write.mode("overwrite").parquet(out)).get
     val written = spark.read.parquet(out).count()
-    assert(entry.total_row_count == written && written > 0)
-    // matches the two-pass variant's accounting
-    val twoPass = EtlPipeline.processDay(spark, drop, date).get.log
-    assert(twoPass.total_row_count == entry.total_row_count)
+    val expected = Tables.events(spark, sf)
+      .filter(date_format(col("ts"), "yyyy-MM-dd") === date).count()
+    assert(entry.total_row_count == written)
+    assert(written == expected && expected > 0)
+  }
+
+  test("writeJdbc coalesces a frame with more partitions than numPartitions and loads every row") {
+    val url = "jdbc:derby:memory:graft_coalesce;create=true"
+    val cfg = Sinks.JdbcConfig(url, "wide", "app", "app", numPartitions = 2, batchSize = 100)
+    val df = spark.range(0, 500, 1, numPartitions = 7).toDF("id")
+    assert(df.rdd.getNumPartitions > cfg.numPartitions)
+    Sinks.writeJdbc(df, cfg, overwrite = true)
+    val back = Readers.jdbc(spark, url, "wide", "app", "app")
+    assert(back.count() == 500)
+    assert(back.select("id").as[Long].collect().sorted.toSeq == (0L until 500L))
   }
 
   test("upsertParquet merges on key: updates win, new keys append, others survive") {

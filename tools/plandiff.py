@@ -6,6 +6,10 @@ Usage: python3 tools/plandiff.py PLANS_r11.json PLANS_r12.json
 Prints, per query whose plan shape changed, the operator-count delta —
 the round-over-round attribution tool for bench regressions: a perf
 delta with a plan diff has a named cause; one without is environment.
+
+Exit status: 0 when no query's plan is CHANGED or REMOVED (NEW queries
+alone are fine), 1 otherwise — so a refactor's "fingerprints unchanged"
+proof can gate on it — and 2 on bad usage.
 """
 import json
 import sys
@@ -37,7 +41,7 @@ def main() -> int:
             print(f"  {q}: {ds}")
     if not (added or removed or changed):
         print("IDENTICAL plan shapes")
-    return 0
+    return 1 if (removed or changed) else 0
 
 
 if __name__ == "__main__":
