@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
@@ -17,8 +17,35 @@ import org.apache.spark.util.SerializableConfiguration
   * FileSystem is S3A-compatible), so a 100M-object bucket becomes a
   * distributed DataFrame instead of a driver OOM. Filename-date
   * extraction is a codegen'd projection (see [[DateExtract]]).
+  *
+  * Subtrees are walked with [[leafFiles]], a depth-first descent over
+  * `listStatusIterator`, not with `listFiles(dir, true)`. The recursive
+  * `listFiles` wraps every file in a `LocatedFileStatus`, whose
+  * constructor reads permission, owner and group; without the native
+  * Hadoop library the local FS gets those by forking `ls -ld` once per
+  * file. Over a 531-file copy of the benchmark drop (4-vCPU VM, one
+  * thread, 5 runs each) that listing took 2.4–2.7 s and the walk
+  * 12–22 ms for the same (path, name, size, mtime) set; in a traced
+  * `etl_days` CLI day the catalog jobs fell from 0.76–0.87 s to
+  * 0.17 s. The trade-off on S3A: a subtree costs one paged LIST per
+  * directory instead of one flat LIST for the whole prefix — the shape
+  * Spark's own file index lists in.
   */
 object FileCatalog {
+
+  /** Every file under `dir`, lazily and depth-first, as the plain
+    * `FileStatus`es of `listStatusIterator` (their permission, owner
+    * and group are never read). `keep` is tested on each child's name
+    * before it is emitted or descended into, so a rejected directory is
+    * never listed. */
+  def leafFiles(fs: FileSystem, dir: Path,
+                keep: String => Boolean = _ => true): Iterator[FileStatus] = {
+    val children = fs.listStatusIterator(dir)
+    Iterator.continually(children).takeWhile(_.hasNext).map(_.next())
+      .filter(st => keep(st.getPath.getName))
+      .flatMap(st =>
+        if (st.isDirectory) leafFiles(fs, st.getPath, keep) else Iterator.single(st))
+  }
 
   /** Recursive listing as a DataFrame of (path, name, size, mtime). */
   def listFiles(spark: SparkSession, root: String): DataFrame = {
@@ -26,29 +53,19 @@ object FileCatalog {
     val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(conf.value)
-    val top = fs.listStatus(rootPath)
-    val (dirs, files) = top.partition(_.isDirectory)
-    val topRows = files.toSeq.map(f =>
-      (f.getPath.toString, f.getPath.getName, f.getLen, f.getModificationTime))
-    // One task per top-level subtree; each lists its own subtree with
-    // a recursive remote iterator (S3A translates this to paged LIST).
+    val (dirs, files) = fs.listStatus(rootPath).partition(_.isDirectory)
+    def row(f: FileStatus) =
+      (f.getPath.toString, f.getPath.getName, f.getLen, f.getModificationTime)
+    // one task per top-level subtree, each walking its own subtree
     val subRows =
       if (dirs.isEmpty) spark.emptyDataset[(String, String, Long, Long)]
       else spark.sparkContext
-        .parallelize(dirs.map(_.getPath.toString).toSeq, math.max(1, dirs.length))
+        .parallelize(dirs.map(_.getPath.toString).toSeq, dirs.length)
         .flatMap { d =>
           val p = new Path(d)
-          val dfs = p.getFileSystem(conf.value)
-          val it = dfs.listFiles(p, true)
-          val buf = scala.collection.mutable.ArrayBuffer
-            .empty[(String, String, Long, Long)]
-          while (it.hasNext) {
-            val f = it.next()
-            buf += ((f.getPath.toString, f.getPath.getName, f.getLen, f.getModificationTime))
-          }
-          buf
+          leafFiles(p.getFileSystem(conf.value), p).map(row)
         }.toDS()
-    topRows.toDF("path", "name", "size", "mtime_ms")
+    files.toSeq.map(row).toDF("path", "name", "size", "mtime_ms")
       .unionByName(subRows.toDF("path", "name", "size", "mtime_ms"))
   }
 

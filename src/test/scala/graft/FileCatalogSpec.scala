@@ -1,8 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
-import graft.sources.FileCatalog
+import graft.sources.{CatalogAggScan, FileCatalog}
 
 class FileCatalogSpec extends SparkSpec {
 
@@ -66,5 +68,87 @@ class FileCatalogSpec extends SparkSpec {
       .filter(col("extracted_date").isNotNull)
       .collect().map(r => r.getAs[String]("extracted_date") -> r.getAs[Long]("n_files")).toMap
     assert(m == Map("2024-01-15" -> 1L, "2024-01-16" -> 1L))
+  }
+
+  /** A tree with every shape a listing can get wrong: a file two
+    * directories deep, an empty directory, `_`- and `.`-prefixed files,
+    * a normally named file under `_temporary/`, and a `.crc` sidecar. */
+  private lazy val shapes: String = {
+    val dir = Files.createTempDirectory("graft_catalog_shapes").toString
+    Files.createDirectories(Paths.get(dir, "a", "b"))
+    Files.createDirectories(Paths.get(dir, "empty"))
+    Files.createDirectories(Paths.get(dir, "_temporary"))
+    Files.write(Paths.get(dir, "events_2024-01-15.csv"), "a\n1\n".getBytes)
+    Files.write(Paths.get(dir, "a", "b", "events_2024-01-16.csv"), "a\n2\n".getBytes)
+    Files.write(Paths.get(dir, "_SUCCESS"), Array.emptyByteArray)
+    Files.write(Paths.get(dir, "a", ".events_2024-01-17.csv"), "a\n3\n".getBytes)
+    Files.write(Paths.get(dir, "_temporary", "events_2024-01-18.csv"), "a\n4\n".getBytes)
+    // the checksummed local FS writes `.events_2024-01-19.csv.crc` beside it
+    val out = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+      .create(new Path(dir, "a/events_2024-01-19.csv"))
+    try out.write("a\n5\n".getBytes) finally out.close()
+    assert(Files.exists(Paths.get(dir, "a", ".events_2024-01-19.csv.crc")))
+    dir
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Set[(String, String, Long, Long)] =
+    df.select("path", "name", "size", "mtime_ms").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
+
+  test("listing equals Hadoop's recursive listFiles; graft-catalog drops hidden paths") {
+    val root = new Path(shapes)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val it = fs.listFiles(root, true) // the reference listing
+    val reference = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(f => (f.getPath.toString, f.getPath.getName, f.getLen, f.getModificationTime))
+      .toSet
+    assert(reference.map(_._2) == Set("events_2024-01-15.csv", "events_2024-01-16.csv",
+      "_SUCCESS", ".events_2024-01-17.csv", "events_2024-01-18.csv",
+      "events_2024-01-19.csv"))
+    assert(rows(FileCatalog.listFiles(spark, shapes)) == reference)
+    val rootUri = fs.makeQualified(root).toString
+    val visible = reference.filterNot(r =>
+      r._1.stripPrefix(rootUri + "/").split('/').exists(c => c.startsWith("_") || c.startsWith(".")))
+    assert(visible.map(_._2) == Set("events_2024-01-15.csv", "events_2024-01-16.csv",
+      "events_2024-01-19.csv"))
+    assert(rows(spark.read.format("graft-catalog").load(shapes)) == visible)
+  }
+
+  test("listings never read permission, owner or group of a file") {
+    spark.sparkContext.hadoopConfiguration
+      .set(s"fs.${CountingFileSystem.scheme}.impl", classOf[CountingFileSystem].getName)
+    val dir = Files.createTempDirectory("graft_catalog_counted").toString
+    Files.createDirectories(Paths.get(dir, "day=2024-01-02", "nested"))
+    Files.createDirectories(Paths.get(dir, "other", "deeper"))
+    Files.write(Paths.get(dir, "events_2024-01-01.csv"), "a\n1\n".getBytes)
+    Files.write(Paths.get(dir, "day=2024-01-02", "x.csv"), "a\n2\n".getBytes)
+    Files.write(Paths.get(dir, "day=2024-01-02", "nested", "y.csv"), "a\n3\n".getBytes)
+    Files.write(Paths.get(dir, "other", "deeper", "events_2024-01-03.csv"), "a\n4\n".getBytes)
+    Files.write(Paths.get(dir, "other", "deeper", "events_2024-01-04.csv"), "a\n5\n".getBytes)
+    val root = s"${CountingFileSystem.scheme}://$dir"
+    def uncounted[T](what: String)(body: => T): T = {
+      CountingFileSystem.reset()
+      val out = body
+      assert(CountingFileSystem.counts == ((0L, 0L, 0L)),
+        s"$what read (permission, owner, group) ${CountingFileSystem.counts} times")
+      out
+    }
+    assert(uncounted("FileCatalog.listFiles")(
+      FileCatalog.listFiles(spark, root).count()) == 5)
+    // a root with no subdirectories: the driver lists it alone
+    assert(uncounted("FileCatalog.listFiles, no subdirectories")(
+      FileCatalog.listFiles(spark, s"$root/other/deeper").count()) == 2)
+    val plain = uncounted("graft-catalog read")(
+      spark.read.format("graft-catalog").load(root).collect())
+    assert(plain.length == 5)
+    val grouped = spark.read.format("graft-catalog").load(root)
+      .groupBy("extracted_date").count()
+    assert(grouped.queryExecution.optimizedPlan.collectFirst {
+      case r: DataSourceV2ScanRelation => r.scan }.exists(_.isInstanceOf[CatalogAggScan]),
+      "the aggregate was not pushed into the catalog scan")
+    val perDate = uncounted("graft-catalog aggregate pushdown")(
+      grouped.collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
+    assert(perDate == Map("2024-01-01" -> 1L, "2024-01-02" -> 2L,
+      "2024-01-03" -> 1L, "2024-01-04" -> 1L))
   }
 }
