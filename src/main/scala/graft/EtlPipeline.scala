@@ -30,12 +30,13 @@ object EtlPipeline {
 
   /** The day's lazy, cleaned frame plus its (path, name) files, or
     * `None` when the drop has no file for `date`
-    * (reference: etl_pipeline.py:326-346). */
+    * (reference: etl_pipeline.py:326-346). Every row's
+    * `processed_date` is `processedAt`. */
   def dayFrame(
       spark: SparkSession,
       dropDir: String,
       date: String,
-      processedAt: Option[java.sql.Timestamp] = None)
+      processedAt: java.sql.Timestamp)
       : Option[(DataFrame, Seq[(String, String)])] = {
     // capped, never unbounded (see FileCatalog.pathsForDate)
     val files = FileCatalog.pathsForDate(spark, dropDir, date)
@@ -53,15 +54,18 @@ object EtlPipeline {
     *
     * Sink contract: `sink` runs exactly one action on the frame it is
     * given. The audit row count is an `observe` metric of that action,
-    * so the day is never counted in a pass of its own. */
+    * so the day is never counted in a pass of its own. One processing
+    * instant, `processedAt` or the time of the call, is stamped on the
+    * rows' `processed_date` and on the entry's `date_processed`. */
   def processDay(
       spark: SparkSession,
       dropDir: String,
       date: String,
       sink: DataFrame => Unit,
       tableName: String = "table_name",
-      processedAt: Option[java.sql.Timestamp] = None): Option[ProcessingLog.Entry] =
-    dayFrame(spark, dropDir, date, processedAt).map { case (cleaned, files) =>
+      processedAt: Option[java.sql.Timestamp] = None): Option[ProcessingLog.Entry] = {
+    val at = processedAt.getOrElse(new java.sql.Timestamp(System.currentTimeMillis()))
+    dayFrame(spark, dropDir, date, at).map { case (cleaned, files) =>
       val obs = Observation(s"etl_day_$date")
       sink(cleaned.observe(obs, count(lit(1)).as("rows")))
       ProcessingLog.entry(
@@ -72,7 +76,7 @@ object EtlPipeline {
         totalRows = obs.get("rows").asInstanceOf[Long],
         columnCount = cleaned.columns.length.toLong,
         sourceFiles = files.map(_._2),
-        processedAt = processedAt.getOrElse(
-          new java.sql.Timestamp(System.currentTimeMillis())))
+        processedAt = at)
     }
+  }
 }

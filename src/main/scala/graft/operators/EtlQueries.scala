@@ -504,8 +504,7 @@ object EtlQueries {
   // ----------------------------------------------------------- B5
   /** Metadata enrichment with a pinned processing time. */
   def enrichMeta(s: SparkSession, dir: String): DataFrame =
-    Enrich.addMetadata(Tables.documents(s, dir), "2024-02-01", 3L,
-        Some(fixedProcessedAt))
+    Enrich.addMetadata(Tables.documents(s, dir), "2024-02-01", 3L, fixedProcessedAt)
       .groupBy(
         date_format(col("source_date"), "yyyy-MM-dd").as("source_date"),
         col("files_merged_count"),
@@ -546,8 +545,7 @@ object EtlQueries {
   /** Full day pipeline on the staged drop, aggregated per event type. */
   def etlDayPipeline(s: SparkSession, dir: String): DataFrame = {
     val drop = EtlStage.stageEventsCsv(s, dir)
-    val (day, _) = EtlPipeline.dayFrame(s, drop, "2024-01-15",
-      processedAt = Some(fixedProcessedAt)).get
+    val (day, _) = EtlPipeline.dayFrame(s, drop, "2024-01-15", fixedProcessedAt).get
     day.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         countDistinct(col("user_id")).as("n_users"),

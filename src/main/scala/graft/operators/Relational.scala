@@ -797,8 +797,11 @@ object Relational {
         .select((groupCols.map(col(_)) :+ col("p") :+ col("value")): _*)
     } else {
       // the bracket selection rides INSIDE the rank operator: only rows
-      // at a wanted rank are ever projected out of the sort pass
-      val ranked = globalRank(df.select((groupCols :+ valueCol).map(col(_)): _*),
+      // at a wanted rank are ever projected out of the sort pass; null
+      // values are dropped before ranking, as the binned arm (and
+      // DuckDB's quantile_disc) drops them
+      val ranked = globalRank(df.select((groupCols :+ valueCol).map(col(_)): _*)
+          .filter(col(valueCol).isNotNull),
         groupCols, Seq(valueCol), nParts,
         rankFilter = Some((rn, n) =>
           ps.map(p => rn === ceil(n * p).cast("long")).reduce(_ || _)))

@@ -32,7 +32,9 @@ import org.apache.spark.util.SerializableConfiguration
   * `YYYY-MM-DD` — every file inherits the directory's date, so date
   * predicates are FULLY enforced by pruning) or loose under the root
   * (date = first ISO `yyyy-MM-dd` in the file name, enforced per file
-  * inside the reader). Both paths enforce in-source, so pushed date
+  * inside the reader). That is not the 11-pattern [[DateExtract]] rule
+  * [[FileCatalog]] applies: `events_20240115.csv` has a date there and
+  * none here. Both paths enforce in-source, so pushed date
   * filters never leave a residual FilterExec in the plan. Hidden
   * entries (`_SUCCESS`, `_temporary/`, dotfiles) are skipped at every
   * path level, the root's own subdirectories included, matching Spark's

@@ -15,10 +15,12 @@ import org.apache.spark.sql.functions._
   * (etl_pipeline.py:202-203) is [[DateExtract.extractAllDates]] — a
   * struct with one field per pattern name.
   *
-  * Implementation is a single `coalesce` of codegen'd
-  * `regexp_extract`/`to_date` chains — one whole-stage-codegen
-  * projection per row, no UDF, so it runs at scan speed over a
-  * 100M-file catalog. Invalid candidates (e.g. the `compact_date`
+  * Implementation is a single `coalesce` of built-in
+  * `regexp_extract`/`to_date` chains, no UDF: over a distributed table
+  * of names it is one whole-stage-codegen projection per row; over
+  * [[FileCatalog]]'s driver-side listing (a local relation) the
+  * optimizer evaluates it once per object, with no Spark job.
+  * `graft-catalog` does not use it (see [[CatalogSource]]). Invalid candidates (e.g. the `compact_date`
   * pattern grabbing the first 8 digits of a unix timestamp) yield
   * null from `to_date` and fall through, exactly like the
   * reference's strptime try/except (etl_pipeline.py:193-195).

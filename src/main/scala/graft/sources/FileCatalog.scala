@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.SerializableConfiguration
 
 /** Object-store catalog (SURVEY.md §2 A1/A3/C5).
   *
@@ -47,26 +46,14 @@ object FileCatalog {
         if (st.isDirectory) leafFiles(fs, st.getPath, keep) else Iterator.single(st))
   }
 
-  /** Recursive listing as a DataFrame of (path, name, size, mtime). */
+  /** Recursive listing as a DataFrame of (path, name, size, mtime):
+    * one [[leafFiles]] walk on the driver into a local relation. */
   def listFiles(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(conf.value)
-    val (dirs, files) = fs.listStatus(rootPath).partition(_.isDirectory)
-    def row(f: FileStatus) =
-      (f.getPath.toString, f.getPath.getName, f.getLen, f.getModificationTime)
-    // one task per top-level subtree, each walking its own subtree
-    val subRows =
-      if (dirs.isEmpty) spark.emptyDataset[(String, String, Long, Long)]
-      else spark.sparkContext
-        .parallelize(dirs.map(_.getPath.toString).toSeq, dirs.length)
-        .flatMap { d =>
-          val p = new Path(d)
-          leafFiles(p.getFileSystem(conf.value), p).map(row)
-        }.toDS()
-    files.toSeq.map(row).toDF("path", "name", "size", "mtime_ms")
-      .unionByName(subRows.toDF("path", "name", "size", "mtime_ms"))
+    leafFiles(rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration), rootPath)
+      .map(f => (f.getPath.toString, f.getPath.getName, f.getLen, f.getModificationTime))
+      .toSeq.toDF("path", "name", "size", "mtime_ms")
   }
 
   /** Listing + extracted_date column — the queryable catalog. */
@@ -106,13 +93,18 @@ object FileCatalog {
 
   /** The reference's `--analyze-dates` histogram
     * (etl_pipeline.py:599-658): file count + size + modification-time
-    * range per extracted date. */
-  def dateHistogram(spark: SparkSession, root: String): DataFrame =
-    catalog(spark, root)
-      .groupBy(col("extracted_date"))
-      .agg(count(lit(1)).as("n_files"), sum(col("size")).as("total_bytes"),
-        min(col("mtime_ms")).as("min_mtime_ms"),
-        max(col("mtime_ms")).as("max_mtime_ms"))
+    * range per extracted date. Like the reference, it is counted on
+    * the driver over the listing, so it runs no Spark job (an
+    * aggregate over a local relation would still plan a shuffle). */
+  def dateHistogram(spark: SparkSession, root: String): DataFrame = {
+    import spark.implicits._
+    catalog(spark, root).select("extracted_date", "size", "mtime_ms")
+      .as[(String, Long, Long)].collect().groupBy(_._1).toSeq
+      .map { case (date, fs) =>
+        (date, fs.length.toLong, fs.map(_._2).sum, fs.map(_._3).min, fs.map(_._3).max)
+      }
+      .toDF("extracted_date", "n_files", "total_bytes", "min_mtime_ms", "max_mtime_ms")
+  }
 
   /** Whole-bucket summary (the reference's analyze header): object
     * count, bytes, distinct dates, date + modification-time ranges. */

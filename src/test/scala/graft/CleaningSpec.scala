@@ -42,6 +42,18 @@ class CleaningSpec extends SparkSpec {
     assert(!out.columns.contains("str_datetime"))
   }
 
+  test("addMetadata adds its three columns with fixed types and nullability") {
+    import org.apache.spark.sql.types._
+    val at = java.sql.Timestamp.valueOf("2024-01-16 08:00:00")
+    val df = Enrich.addMetadata(Seq((1, "x")).toDF("id", "v"), "2024-01-15", 3L, at)
+    assert(df.schema.takeRight(3) == Seq(
+      StructField("processed_date", TimestampType, nullable = false),
+      StructField("source_date", DateType, nullable = true),
+      StructField("files_merged_count", LongType, nullable = false)))
+    assert(df.select("processed_date", "source_date", "files_merged_count").head().toSeq ==
+      Seq(at, java.sql.Date.valueOf("2024-01-15"), 3L))
+  }
+
   test("jdbc reader options carry partitioned-read config (A7)") {
     val opts = Readers.jdbcOptions("jdbc:postgresql://db:5432/wh", "t", "u", "p",
       Some(("id", 0L, 1000L, 16)))

@@ -33,6 +33,16 @@ class ExactQuantileDispatchSpec extends SparkSpec {
     rows.toDF("grp", "value")
   }
 
+  // the same groups plus one whose values are partly null and one whose
+  // values are all null: both arms rank only the non-null values
+  private lazy val withNulls = {
+    import spark.implicits._
+    val nulls = (1 to 11).map(i =>
+      ("d", if (i % 3 == 0) None else Some(((i * 31) % 5).toDouble))) ++
+      Seq(("e", None), ("e", None))
+    df.union(nulls.toDF("grp", "value"))
+  }
+
   private val ps = Seq(0.25, 0.5, 0.75)
 
   private def rows(d: org.apache.spark.sql.DataFrame) =
@@ -41,21 +51,24 @@ class ExactQuantileDispatchSpec extends SparkSpec {
       .toSet
 
   test("both dispatch arms are row-identical on tie-heavy groups") {
-    val rankArm = withThreshold(Long.MaxValue.toString) {
-      rows(Relational.exactQuantiles(df, Seq("grp"), "value", ps))
-    }
-    val binnedArm = withThreshold("0") {
-      rows(Relational.exactQuantiles(df, Seq("grp"), "value", ps))
-    }
-    assert(rankArm == binnedArm, s"rank=$rankArm binned=$binnedArm")
-    // and both match a literal sort-based oracle
     import spark.implicits._
-    val oracle = df.as[(String, Double)].collect().groupBy(_._1).flatMap {
-      case (g, vs) =>
-        val sorted = vs.map(_._2).sorted
-        ps.map(p => (g, p, sorted(math.ceil(sorted.length * p).toInt - 1)))
-    }.toSet
-    assert(rankArm == oracle, s"rank=$rankArm oracle=$oracle")
+    for (input <- Seq(df, withNulls)) {
+      val rankArm = withThreshold(Long.MaxValue.toString) {
+        rows(Relational.exactQuantiles(input, Seq("grp"), "value", ps))
+      }
+      val binnedArm = withThreshold("0") {
+        rows(Relational.exactQuantiles(input, Seq("grp"), "value", ps))
+      }
+      assert(rankArm == binnedArm, s"rank=$rankArm binned=$binnedArm")
+      // and both match a literal sort-based oracle over the non-null values
+      val oracle = input.as[(String, Option[Double])].collect().groupBy(_._1).flatMap {
+        case (g, vs) =>
+          val sorted = vs.flatMap(_._2).sorted
+          if (sorted.isEmpty) Nil
+          else ps.map(p => (g, p, sorted(math.ceil(sorted.length * p).toInt - 1)))
+      }.toSet
+      assert(rankArm == oracle, s"rank=$rankArm oracle=$oracle")
+    }
   }
 
   test("threshold picks the arm; non-dyadic p always takes the rank arm") {

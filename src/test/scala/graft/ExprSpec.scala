@@ -1,13 +1,50 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{HashExprs, VectorExprs}
+import graft.functions.{HashExprs, RunParam, VectorExprs}
 
 /** Unit tests for the custom codegen expressions: each is checked
   * against an independent Scala (or declarative-SQL) reimplementation
   * of the same math. */
 class ExprSpec extends SparkSpec {
   import spark.implicits._
+
+  test("RunParam returns the same rows compiled and interpreted, and a new value compiles nothing") {
+    def query(ts: java.sql.Timestamp, d: java.sql.Date, n: Long, str: String) =
+      spark.range(0, 5).select(col("id"),
+        RunParam.of(ts).as("ts"), RunParam.of(d).as("d"),
+        RunParam.of(n).as("n"), RunParam.of(str).as("s"),
+        (RunParam.of(n) + col("id")).as("n_plus"),
+        date_add(RunParam.of(d), col("id").cast("int")).as("d_plus"),
+        concat(RunParam.of(str), col("id").cast("string")).as("s_plus"),
+        (RunParam.of(ts) > lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))).as("ts_gt"))
+    def rows(mode: String, wholeStage: Boolean, ts: java.sql.Timestamp,
+             d: java.sql.Date, n: Long, str: String) = {
+      val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+      val prev = keys.map(k => k -> spark.conf.getOption(k))
+      spark.conf.set(keys(0), mode)
+      spark.conf.set(keys(1), wholeStage.toString)
+      try query(ts, d, n, str).collect().map(_.toSeq).toSeq
+      finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val ts = java.sql.Timestamp.valueOf("2024-01-15 10:11:12.123456")
+    val d = java.sql.Date.valueOf("2024-01-15")
+    val compiled = rows("CODEGEN_ONLY", wholeStage = true, ts, d, 42L, "day-")
+    val interpreted = rows("NO_CODEGEN", wholeStage = false, ts, d, 42L, "day-")
+    assert(compiled == interpreted)
+    assert(compiled.map(_.take(5)) == (0L until 5L).map(i => Seq(i, ts, d, 42L, "day-")))
+    assert(compiled(4).slice(5, 9) == Seq(46L, java.sql.Date.valueOf("2024-01-19"), "day-4", true))
+    // the values are not in the generated source: new ones reuse its classes
+    val before = org.apache.spark.graftspec.SpecBridge.codegenClasses()
+    val next = rows("CODEGEN_ONLY", wholeStage = true,
+      java.sql.Timestamp.valueOf("2023-12-31 23:59:59"), java.sql.Date.valueOf("2024-02-29"),
+      -7L, "other-")
+    assert(org.apache.spark.graftspec.SpecBridge.codegenClasses() == before)
+    assert(next(1).slice(5, 9) == Seq(-6L, java.sql.Date.valueOf("2024-03-01"), "other-1", false))
+  }
 
   test("FloatVecDot matches order-preserving Scala accumulation") {
     val a = Array(1.5f, -2.25f, 3.125f, 0.001f)

@@ -70,6 +70,32 @@ class FileCatalogSpec extends SparkSpec {
     assert(m == Map("2024-01-15" -> 1L, "2024-01-16" -> 1L))
   }
 
+  test("pathsForDate and dateHistogram list on the driver and start no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "graft-file-catalog-driver"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "FileCatalog over the nested root")
+    val (paths, hist) =
+      try (FileCatalog.pathsForDate(spark, root, "2024-01-16"),
+        FileCatalog.dateHistogram(spark, root).collect()
+          .map(r => Option(r.getAs[String]("extracted_date")) -> r.getAs[Long]("n_files")).toMap)
+      finally {
+        sc.clearJobGroup()
+        org.apache.spark.graftspec.SpecBridge.drainListenerBus(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(paths.map(_._2) == Seq("events_2024-01-16.csv.gz"))
+    assert(hist == Map(Some("2024-01-15") -> 1L, Some("2024-01-16") -> 1L, None -> 1L))
+    assert(jobs.get == 0, s"${jobs.get} Spark job(s) started")
+  }
+
   /** A tree with every shape a listing can get wrong: a file two
     * directories deep, an empty directory, `_`- and `.`-prefixed files,
     * a normally named file under `_temporary/`, and a `.crc` sidecar. */

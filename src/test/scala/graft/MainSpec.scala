@@ -39,6 +39,15 @@ class MainSpec extends SparkSpec {
     assert(log.count() == 2)
     assert(log.select(sum(col("total_row_count"))).collect()
       .head.getLong(0) == expected)
+    // one processing instant per day: the rows' processed_date is the
+    // day's audit date_processed
+    val stamped = loaded.groupBy(col("source_date"))
+      .agg(collect_set(col("processed_date")).as("at")).collect()
+      .map(r => r.getDate(0).toString -> r.getSeq[java.sql.Timestamp](1).toSet).toMap
+    val audited = log.select(col("date_of_data"), col("date_processed")).collect()
+      .map(r => r.getDate(0).toString -> Set(r.getTimestamp(1))).toMap
+    assert(stamped.keySet == Set("2024-01-15", "2024-01-16"))
+    assert(stamped == audited)
   }
 
   test("a day with no files is skipped and accounted, not fatal") {

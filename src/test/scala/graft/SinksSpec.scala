@@ -173,6 +173,20 @@ class SinksSpec extends SparkSpec {
     assert(written == expected && expected > 0)
   }
 
+  test("a second processDay on a new date compiles no codegen class") {
+    val drop = EtlStage.stageEventsCsv(spark, sf)
+    val dates = new File(drop).list().filter(_.startsWith("events_"))
+      .map(_.stripPrefix("events_").take(10)).distinct.sorted
+    assert(dates.length >= 2)
+    val noop: org.apache.spark.sql.DataFrame => Unit =
+      _.write.format("noop").mode("overwrite").save()
+    assert(EtlPipeline.processDay(spark, drop, dates(0), noop).isDefined)
+    val before = org.apache.spark.graftspec.SpecBridge.codegenClasses()
+    assert(EtlPipeline.processDay(spark, drop, dates(1), noop).isDefined)
+    val compiled = org.apache.spark.graftspec.SpecBridge.codegenClasses() - before
+    assert(compiled == 0, s"day ${dates(1)} compiled $compiled classes after day ${dates(0)}")
+  }
+
   test("writeJdbc coalesces a frame with more partitions than numPartitions and loads every row") {
     val url = "jdbc:derby:memory:graft_coalesce;create=true"
     val cfg = Sinks.JdbcConfig(url, "wide", "app", "app", numPartitions = 2, batchSize = 100)
