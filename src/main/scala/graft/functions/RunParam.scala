@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{LeafExpression, Literal}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, EmptyBlock, ExprCode, FalseLiteral, JavaCode, TrueLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.graftfn.ColumnBridge
 import org.apache.spark.sql.types.DataType
@@ -23,25 +23,21 @@ import org.apache.spark.sql.types.DataType
   * `dataType`; build one with [[RunParam.of]].
   */
 case class RunParam(value: Any, dataType: DataType) extends LeafExpression {
+  require(value != null, "a run parameter carries a value")
 
-  override def nullable: Boolean = value == null
+  override def nullable: Boolean = false
   override def foldable: Boolean = false
   override def prettyName: String = "run_param"
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = value
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (value == null) {
-      ev.copy(code = EmptyBlock, isNull = TrueLiteral,
-        value = JavaCode.defaultLiteral(dataType))
-    } else {
-      val javaType = CodeGenerator.javaType(dataType)
-      val boxed = CodeGenerator.boxedType(dataType)
-      val ref = ctx.addReferenceObj("runParam", value, boxed)
-      // primitives are unboxed explicitly; objects (UTF8String, ...) pass through
-      val read = if (CodeGenerator.isPrimitiveType(dataType)) s"$ref.${javaType}Value()" else ref
-      ev.copy(code = code"$javaType ${ev.value} = $read;", isNull = FalseLiteral)
-    }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val javaType = CodeGenerator.javaType(dataType)
+    val ref = ctx.addReferenceObj("runParam", value, CodeGenerator.boxedType(dataType))
+    // primitives are unboxed explicitly; objects (UTF8String, ...) pass through
+    val read = if (CodeGenerator.isPrimitiveType(dataType)) s"$ref.${javaType}Value()" else ref
+    ev.copy(code = code"$javaType ${ev.value} = $read;", isNull = FalseLiteral)
+  }
 }
 
 object RunParam {

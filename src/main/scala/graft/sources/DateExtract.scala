@@ -20,10 +20,11 @@ import org.apache.spark.sql.functions._
   * of names it is one whole-stage-codegen projection per row; over
   * [[FileCatalog]]'s driver-side listing (a local relation) the
   * optimizer evaluates it once per object, with no Spark job.
-  * `graft-catalog` does not use it (see [[CatalogSource]]). Invalid candidates (e.g. the `compact_date`
-  * pattern grabbing the first 8 digits of a unix timestamp) yield
-  * null from `to_date` and fall through, exactly like the
-  * reference's strptime try/except (etl_pipeline.py:193-195).
+  * `graft-catalog` does not use it (see [[CatalogSource]]). Invalid
+  * candidates (e.g. the `compact_date` pattern grabbing the first 8
+  * digits of a unix timestamp) yield null from `to_date` and fall
+  * through, exactly like the reference's strptime try/except
+  * (etl_pipeline.py:193-195).
   */
 object DateExtract {
 

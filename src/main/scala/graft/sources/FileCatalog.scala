@@ -10,25 +10,33 @@ import org.apache.spark.sql.functions._
   * (reference: etl_pipeline.py:290-324): list every object, extract a
   * date from each filename, filter to the processing day.
   *
-  * Scale design: the reference pages the whole bucket through the
-  * driver. Here only the first directory level is listed on the
-  * driver; each subtree is then listed *on executors* (Hadoop
-  * FileSystem is S3A-compatible), so a 100M-object bucket becomes a
-  * distributed DataFrame instead of a driver OOM. Filename-date
-  * extraction is a codegen'd projection (see [[DateExtract]]).
+  * Scale design: like the reference, which pages the whole bucket
+  * through the driver, the driver walks the drop with [[leafFiles]]
+  * and holds the listing as a local relation. `catalog`, `filesForDate`
+  * and `pathsForDate` then run inside the optimizer
+  * (ConvertToLocalRelation evaluates the date projection, filter and
+  * limit), and `dateHistogram` counts on the driver, so none of them
+  * starts a Spark job. Over the 528-object seed-7 benchmark drop
+  * (4-vCPU VM) a `pathsForDate` call went from 423 to 148 ms (median
+  * of calls 6–25 in one JVM), and a traced `etl_days` CLI day went
+  * from two catalog jobs, 0.25 s a day, to none (9 → 7 jobs a day).
+  * The trade-off is driver memory: the whole listing lives there, one
+  * row per object, as in the reference. For a bucket past the driver's reach use
+  * `graft-catalog` ([[CatalogSource]]): it prunes date subtrees on the
+  * driver and lists the survivors on executors, but it dates objects
+  * by directory or first ISO date in the name, not by the 11-pattern
+  * [[DateExtract]] rule applied here.
   *
-  * Subtrees are walked with [[leafFiles]], a depth-first descent over
-  * `listStatusIterator`, not with `listFiles(dir, true)`. The recursive
-  * `listFiles` wraps every file in a `LocatedFileStatus`, whose
-  * constructor reads permission, owner and group; without the native
-  * Hadoop library the local FS gets those by forking `ls -ld` once per
-  * file. Over a 531-file copy of the benchmark drop (4-vCPU VM, one
-  * thread, 5 runs each) that listing took 2.4–2.7 s and the walk
-  * 12–22 ms for the same (path, name, size, mtime) set; in a traced
-  * `etl_days` CLI day the catalog jobs fell from 0.76–0.87 s to
-  * 0.17 s. The trade-off on S3A: a subtree costs one paged LIST per
-  * directory instead of one flat LIST for the whole prefix — the shape
-  * Spark's own file index lists in.
+  * [[leafFiles]] is a depth-first descent over `listStatusIterator`,
+  * not `listFiles(dir, true)`. The recursive `listFiles` wraps every
+  * file in a `LocatedFileStatus`, whose constructor reads permission,
+  * owner and group; without the native Hadoop library the local FS
+  * gets those by forking `ls -ld` once per file. Over a 531-file copy
+  * of the benchmark drop (4-vCPU VM, one thread, 5 runs each) that
+  * listing took 2.4–2.7 s and the walk 12–22 ms for the same (path,
+  * name, size, mtime) set. The trade-off on S3A: a subtree costs one
+  * paged LIST per directory instead of one flat LIST for the whole
+  * prefix — the shape Spark's own file index lists in.
   */
 object FileCatalog {
 
@@ -69,13 +77,11 @@ object FileCatalog {
   /** Driver-side (path, name) list for one day, name-sorted, CAPPED.
     *
     * Spark's file-based sources materialize the scan's file list on
-    * the driver no matter how it is produced, so "fully distributed"
-    * is not on the table for the read itself — what this helper does
-    * is make that driver bound explicit and fail-fast: the collect is
-    * `limit(maxFiles+1)`, never unbounded, and a day with more objects
-    * than `maxFiles` raises a clear error (partition the drop by date
-    * subdirectories and read the directory instead) rather than
-    * silently pinning driver memory. */
+    * the driver no matter how it is produced; this helper makes that
+    * bound explicit and fail-fast: the collect is `limit(maxFiles+1)`,
+    * and a day with more objects than `maxFiles` raises a clear error
+    * (partition the drop by date subdirectories and read the directory
+    * instead) rather than handing the read an unbounded file list. */
   def pathsForDate(spark: SparkSession, root: String, date: String,
                    maxFiles: Int = 100000): Seq[(String, String)] = {
     // strict upper bound so maxFiles + 1 can't overflow to a negative
