@@ -24,7 +24,7 @@ object ProcessingLog {
   def entry(dateOfData: String, filesProcessed: Long, filesMerged: Long,
             tableName: String, totalRows: Long, columnCount: Long,
             sourceFiles: Seq[String],
-            processedAt: java.sql.Timestamp = new java.sql.Timestamp(System.currentTimeMillis())): Entry =
+            processedAt: java.sql.Timestamp): Entry =
     Entry(processedAt, java.sql.Date.valueOf(dateOfData), filesProcessed,
       filesMerged, tableName, totalRows, columnCount, sourceFiles.mkString(", "))
 
