@@ -13,8 +13,11 @@ import org.apache.spark.sql.SparkSession
   * `--analyze-dates` prints the drop's date histogram (file counts,
   * bytes, mtime range) and exits, like the reference's
   * `analyze_bucket_dates`. Otherwise each day in [start, end] runs the
-  * full day pipeline and loads the result plus a processing-log entry
-  * over JDBC, with per-day success accounting ("Successfully processed
+  * full day pipeline and loads the result over JDBC, then appends its
+  * processing-log entry as a plain INSERT. Each day prints one line
+  * starting with its date: rows loaded and files, then the day's
+  * funnel (rows read, duplicates removed, empty columns dropped). The
+  * run ends with per-day success accounting ("Successfully processed
   * X out of Y days"). Dates are validated (format, start ≤ end) and
   * the DB connection is tested up front — all before any Spark job.
   *
@@ -127,14 +130,16 @@ object Main {
     var failed = 0
     days.foreach { day =>
       try {
-        EtlPipeline.processDay(spark, cfg.dropDir, day.toString,
+        EtlPipeline.runDay(spark, cfg.dropDir, day.toString,
             sink = sinks.Sinks.writeJdbc(_, cfg.jdbc), tableName = cfg.table) match {
           case None =>
             out(s"$day: no files found, skipping")
-          case Some(log) =>
-            sinks.Sinks.writeJdbc(sinks.ProcessingLog.toDf(spark, Seq(log)), cfg.jdbcLog)
+          case Some((log, loaded)) =>
+            sinks.ProcessingLog.appendJdbc(Seq(log), cfg.jdbcLog)
             out(s"$day: loaded ${log.total_row_count} rows " +
-              s"from ${log.files_processed} file(s)")
+              s"from ${log.files_processed} file(s); read ${loaded.rowsRead} rows, " +
+              s"removed ${loaded.rowsRead - log.total_row_count} duplicate(s), " +
+              s"dropped ${loaded.emptyColumns.length} empty column(s)")
             successful += 1
         }
       } catch {

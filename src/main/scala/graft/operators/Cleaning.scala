@@ -11,11 +11,14 @@ object Cleaning {
     * `df.columns.str.replace(r"[\{\}]", "").str.strip()`).
     * Pure metadata — zero data movement. */
   def cleanColumnNames(df: DataFrame): DataFrame = {
-    val renames = df.columns.map(c => c -> c.replaceAll("[{}]", "").trim)
+    val renames = df.columns.map(c => c -> cleanName(c))
     renames.foldLeft(df) { case (d, (from, to)) =>
       if (from == to) d else d.withColumnRenamed(from, to)
     }
   }
+
+  /** One column name as [[cleanColumnNames]] cleans it. */
+  def cleanName(c: String): String = c.replaceAll("[{}]", "").trim
 
   /** Merge heterogeneous frames, tolerating disjoint column sets —
     * the reference's `pd.concat(..., sort=False)`
@@ -28,7 +31,9 @@ object Cleaning {
     * (reference: etl_pipeline.py:453 `df.isnull().all()`).
     * One distributed pass: a single aggregate computes every column's
     * non-null count map-side; the schema decision happens on the
-    * driver with just one row collected. */
+    * driver with just one row collected. The ETL day does not call
+    * it: its one profile pass (`Readers.csvProfile`) already finds the
+    * columns with no value, and the day's scan never reads them. */
   def dropEmptyColumns(df: DataFrame): DataFrame = {
     val counts = df.select(df.columns.map(c => count(col(s"`$c`")).as(c)).toSeq: _*)
       .head()

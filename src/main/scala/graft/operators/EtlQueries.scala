@@ -545,7 +545,7 @@ object EtlQueries {
   /** Full day pipeline on the staged drop, aggregated per event type. */
   def etlDayPipeline(s: SparkSession, dir: String): DataFrame = {
     val drop = EtlStage.stageEventsCsv(s, dir)
-    val (day, _) = EtlPipeline.dayFrame(s, drop, "2024-01-15", fixedProcessedAt).get
+    val day = EtlPipeline.dayFrame(s, drop, "2024-01-15", fixedProcessedAt).get.frame
     day.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         countDistinct(col("user_id")).as("n_users"),

@@ -67,24 +67,20 @@ object DateExtract {
                                   quarterGroup: Int = 1, yearGroup: Int = 2)
     extends CustomPattern
 
-  /** Null-on-no-match extraction — ONLY for consumers that cast the
-    * candidate (ANSI casts throw on ""). Costs two RegExpExtract nodes
-    * in the tree (the when duplicates the child); parse-based
-    * consumers use [[extRaw]] instead. */
-  private def ext(c: Column, pattern: String, group: Int = 1): Column = {
-    val m = regexp_extract(c, pattern, group)
-    when(m =!= "", m)
-  }
-
-  /** Raw extraction: "" on no match. Every try_to_date/try_to_timestamp
-    * consumer treats "" exactly like null (the parse fails → null →
-    * falls through), and ONE RegExpExtract node per use instead of the
-    * wrapped form's two halves the dominant per-row AND per-plan cost
-    * of the 15-pattern chains — this projection is the widest in the
-    * repo, and with the per-query plan re-analysis in the bench loop
-    * the TREE SIZE itself was most of date_extract_custom's time. */
-  private def extRaw(c: Column, pattern: String, group: Int = 1): Column =
-    regexp_extract(c, pattern, group)
+  /** Null-on-no-match extraction: `nullif(regexp_extract(...), "")`.
+    * A null candidate short-circuits every consumer (`try_to_date`,
+    * `concat`, `translate`, casts), where "" was still sent through
+    * each pattern's parse and failed there. Over the 528-object
+    * seed-7 benchmark drop (4-vCPU VM, a busy host), a `pathsForDate`
+    * call took 165 ms with "" and 134 ms with null (median of 30
+    * alternating calls in one JVM), for the same extracted dates. `nullif`
+    * names its argument once (a common-expression `With`), so the
+    * analyzed tree holds ONE RegExpExtract per use, not the two of
+    * `when(m =!= "", m)`: this projection is the widest in the repo,
+    * and with the per-query plan re-analysis in the bench loop the
+    * TREE SIZE itself was most of date_extract_custom's time. */
+  private def ext(c: Column, pattern: String, group: Int = 1): Column =
+    nullif(regexp_extract(c, pattern, group), lit(""))
 
   /** Validate a yyyy-MM-dd candidate: null unless it parses.
     * `try_to_date`, not `to_date`: under ANSI mode (Spark 4 default) a
@@ -114,11 +110,13 @@ object DateExtract {
   private val unixTimestamp      = "timestamp_(\\d{10})"
   private val dateRange          = "(\\d{4}-\\d{2}-\\d{2})_to_(\\d{4}-\\d{2}-\\d{2})"
 
+  // one reference to the candidate each, so its RegExpExtract is in
+  // the tree once (three substrings would hold it three times)
   private def usToIso(us: Column): Column = // MM-DD-YYYY → YYYY-MM-DD
-    concat(substring(us, 7, 4), lit("-"), substring(us, 1, 2), lit("-"), substring(us, 4, 2))
+    regexp_replace(us, lit("^(\\d{2})-(\\d{2})-(\\d{4})$"), lit("$3-$1-$2"))
 
   private def compactToIso(c: Column): Column = // YYYYMMDD → YYYY-MM-DD
-    concat(substring(c, 1, 4), lit("-"), substring(c, 5, 2), lit("-"), substring(c, 7, 2))
+    regexp_replace(c, lit("^(\\d{4})(\\d{2})(\\d{2})$"), lit("$1-$2-$3"))
 
   /** Custom-pattern candidate parsed+validated via its own datetime
     * format, surfaced as an ISO date string (null = no match or
@@ -128,12 +126,12 @@ object DateExtract {
 
   private def customTimestamp(filename: Column, p: CustomPattern): Column = p match {
     case DatePattern(_, regex, format, group) =>
-      try_to_timestamp(extRaw(filename, regex, group), lit(format))
+      try_to_timestamp(ext(filename, regex, group), lit(format))
     case DateTimePattern(_, regex, df, tf, dg, tg) =>
       // concat_ws drops nulls, so a date-only or no-match candidate
       // fails the combined-format parse and falls through cleanly
       try_to_timestamp(
-        concat_ws(" ", extRaw(filename, regex, dg), extRaw(filename, regex, tg)),
+        concat_ws(" ", ext(filename, regex, dg), ext(filename, regex, tg)),
         lit(s"$df $tf"))
     case QuarterPattern(_, regex, qg, yg) =>
       val q = ext(filename, regex, qg).cast("int")
@@ -147,22 +145,22 @@ object DateExtract {
     * reference priority order — shared by the scalar and the
     * all-matches forms. */
   private def defaultDates(filename: Column): Seq[(String, Column)] = Seq(
-    "iso_datetime_compact" -> validIso(extRaw(filename, isoDatetimeCompact)),
-    "iso_datetime_full"    -> validIso(extRaw(filename, isoDatetimeFull)),
-    "iso_date"             -> validIso(extRaw(filename, isoDate)),
-    "us_datetime"          -> validIso(usToIso(extRaw(filename, usDatetime))),
-    "us_date"              -> validIso(usToIso(extRaw(filename, usDate))),
-    "compact_date"         -> validIso(compactToIso(extRaw(filename, compactDate))),
-    "underscore_date"      -> validIso(translate(extRaw(filename, underscoreDate), "_", "-")),
-    "dot_date"             -> validIso(translate(extRaw(filename, dotDate), ".", "-")),
+    "iso_datetime_compact" -> validIso(ext(filename, isoDatetimeCompact)),
+    "iso_datetime_full"    -> validIso(ext(filename, isoDatetimeFull)),
+    "iso_date"             -> validIso(ext(filename, isoDate)),
+    "us_datetime"          -> validIso(usToIso(ext(filename, usDatetime))),
+    "us_date"              -> validIso(usToIso(ext(filename, usDate))),
+    "compact_date"         -> validIso(compactToIso(ext(filename, compactDate))),
+    "underscore_date"      -> validIso(translate(ext(filename, underscoreDate), "_", "-")),
+    "dot_date"             -> validIso(translate(ext(filename, dotDate), ".", "-")),
     // year_month: valid when it parses as yyyy-MM (month 01-12) —
     // same single-occurrence parse→reformat shape as validIso
     "year_month" ->
       date_format(call_function("try_to_date",
-        extRaw(filename, yearMonth), lit("yyyy-MM")), "yyyy-MM"),
+        ext(filename, yearMonth), lit("yyyy-MM")), "yyyy-MM"),
     "unix_timestamp" ->
       date_format(to_timestamp(ext(filename, unixTimestamp).cast("long")), "yyyy-MM-dd"),
-    "date_range"           -> validIso(extRaw(filename, dateRange)))
+    "date_range"           -> validIso(ext(filename, dateRange)))
 
   /** ISO date string (or yyyy-MM for the year_month pattern), null if
     * no pattern matches — the reference's `return_format='string'`. */
@@ -188,7 +186,7 @@ object DateExtract {
   def extractAllDates(filename: Column, custom: Seq[CustomPattern] = Nil): Column = {
     val fields = custom.map(p => customDate(filename, p).as(p.name)) ++
       defaultDates(filename).map { case (n, c) => c.as(n) } ++ Seq(
-        validIso(extRaw(filename, dateRange, 2)).as("date_range_end"),
+        validIso(ext(filename, dateRange, 2)).as("date_range_end"),
         ext(filename, unixTimestamp).cast("long").as("unix_timestamp_raw"))
     struct(fields: _*)
   }
@@ -197,21 +195,21 @@ object DateExtract {
     * midnight of the extracted date — the reference's
     * `return_format='datetime'`. */
   def extractTimestamp(filename: Column): Column = {
-    val compactTime = extRaw(filename, isoDatetimeCompact, 2)
+    val compactTime = ext(filename, isoDatetimeCompact, 2)
     val isoCompactTs = when(
-      validIso(extRaw(filename, isoDatetimeCompact)).isNotNull && compactTime =!= "",
+      validIso(ext(filename, isoDatetimeCompact)).isNotNull,
       try_to_timestamp(concat(
-        extRaw(filename, isoDatetimeCompact), lit(" "),
+        ext(filename, isoDatetimeCompact), lit(" "),
         substring(compactTime, 1, 2), lit(":"),
         substring(compactTime, 3, 2), lit(":"),
         substring(compactTime, 5, 2))))
     val isoFullTs = try_to_timestamp(
-      concat(extRaw(filename, isoDatetimeFull), lit(" "), extRaw(filename, isoDatetimeFull, 2)))
-    val usTime = extRaw(filename, usDatetime, 2)
+      concat(ext(filename, isoDatetimeFull), lit(" "), ext(filename, isoDatetimeFull, 2)))
+    val usTime = ext(filename, usDatetime, 2)
     val usTs = when(
-      validIso(usToIso(extRaw(filename, usDatetime))).isNotNull && usTime =!= "",
+      validIso(usToIso(ext(filename, usDatetime))).isNotNull,
       try_to_timestamp(concat(
-        usToIso(extRaw(filename, usDatetime)), lit(" "),
+        usToIso(ext(filename, usDatetime)), lit(" "),
         substring(usTime, 1, 2), lit(":"),
         substring(usTime, 3, 2), lit(":"),
         substring(usTime, 5, 2))))

@@ -1,7 +1,14 @@
 package graft.sources
 
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, NullType, StructType}
 
 /** File readers (SURVEY.md §2 A4-A7).
   *
@@ -12,6 +19,13 @@ import org.apache.spark.sql.functions._
   * from inference or a supplied schema, and `source_file` tagging
   * (etl_pipeline.py:389) is the codegen'd `input_file_name()` instead
   * of a per-frame python assignment.
+  *
+  * The ETL day does not let the CSV reader infer. It reads each file's
+  * header on the driver ([[csvHeader]]), profiles the day in one job
+  * over an all-string scan ([[csvProfile]]: column types, empty
+  * columns and rows read), then scans with the profiled schema. Spark's
+  * inferring reader costs a header job and an inference job on top of
+  * the scan, and an empty-column decision costs an aggregate job more.
   */
 object Readers {
 
@@ -31,6 +45,61 @@ object Readers {
     val r = spark.read.options(csvOptions)
     val r2 = schema.map(r.schema).getOrElse(r.option("inferSchema", inferSchema.toString))
     r2.csv(paths: _*)
+  }
+
+  /** [[csvOptions]] with inference on, built as Spark's CSV reader
+    * builds them (`CSVFileFormat`: the session's column-pruning flag,
+    * time zone and corrupt-record column), so the header rule and the
+    * type inference below are the reader's own. */
+  private def csvParseOptions(spark: SparkSession): CSVOptions = {
+    val conf = spark.sessionState.conf
+    new CSVOptions(csvOptions + ("inferSchema" -> "true"), conf.csvColumnPruning,
+      conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+  }
+
+  /** One CSV file's field names, read on the driver, or `None` for a
+    * file with no header line (empty or blank). The header is the
+    * file's first non-blank line, decoded by extension through
+    * Hadoop's `CompressionCodecFactory` (so `.gz` works), and named by
+    * the rule of Spark's header read (`CSVUtils.makeSafeHeader`):
+    * `_c<i>` for an empty name, an index suffix on duplicates, compared
+    * under the session's case sensitivity. */
+  def csvHeader(spark: SparkSession, path: String): Option[Seq[String]] = {
+    val options = csvParseOptions(spark)
+    CSVUtils.readHeaderLine(new Path(path), options, spark.sparkContext.hadoopConfiguration)
+      .map { line =>
+        CSVUtils.makeSafeHeader(new CsvParser(options.asParserSettings).parseLine(line),
+          spark.sessionState.conf.caseSensitiveAnalysis, options).toSeq
+      }
+  }
+
+  /** What one pass over a CSV day finds: the inferred `schema` (a
+    * column with no value is a string, as in Spark's inference), the
+    * columns with no value at all, and the rows read. */
+  final case class CsvProfile(schema: StructType, emptyColumns: Seq[String], rows: Long)
+
+  /** Profiles `strings`, an all-`StringType` CSV scan (or a union of
+    * them), in one Spark job: every row goes through Spark's own
+    * `CSVInferSchema.inferRowType`, partitions merge with
+    * `mergeRowTypes`, and the rows are counted alongside. A null cell
+    * is an empty token, which inference skips, so a column whose type
+    * ends as `NullType` holds no value at all: exactly the column a
+    * count-based empty-column drop removes. Runs under
+    * `withSQLConfPropagated`, as Spark's own inference does. */
+  def csvProfile(strings: DataFrame): CsvProfile = {
+    val spark = strings.sparkSession
+    val infer = new CSVInferSchema(csvParseOptions(spark))
+    val names = strings.columns
+    val n = names.length
+    val (types, rows) = SQLExecution.withSQLConfPropagated(castToImpl(spark)) {
+      strings.queryExecution.toRdd.aggregate((Array.fill[DataType](n)(NullType), 0L))(
+        { case ((soFar, read), row) =>
+          val tokens = Array.tabulate(n)(i => if (row.isNullAt(i)) null else row.getUTF8String(i).toString)
+          (infer.inferRowType(soFar, tokens), read + 1) },
+        { case ((t1, r1), (t2, r2)) => (infer.mergeRowTypes(t1, t2), r1 + r2) })
+    }
+    CsvProfile(StructType(infer.toStructFields(types, names)),
+      names.zip(types).collect { case (c, NullType) => c }.toSeq, rows)
   }
 
   /** CSV ingest with row-level quarantine (A4b): PERMISSIVE parse

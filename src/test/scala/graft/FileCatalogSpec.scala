@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
-import graft.sources.{CatalogAggScan, FileCatalog}
+import graft.sources.{CatalogAggScan, DateExtract, FileCatalog}
 
 class FileCatalogSpec extends SparkSpec {
 
@@ -94,6 +94,13 @@ class FileCatalogSpec extends SparkSpec {
     assert(paths.map(_._2) == Seq("events_2024-01-16.csv.gz"))
     assert(hist == Map(Some("2024-01-15") -> 1L, Some("2024-01-16") -> 1L, None -> 1L))
     assert(jobs.get == 0, s"${jobs.get} Spark job(s) started")
+  }
+
+  test("extractDate's analyzed tree holds one RegExpExtract per pattern") {
+    import org.apache.spark.sql.catalyst.expressions.RegExpExtract
+    val plan = spark.range(1).select(lit("events_2024-01-15.csv").as("name"))
+      .select(DateExtract.extractDate(col("name"))).queryExecution.analyzed
+    assert(plan.expressions.map(_.collect { case r: RegExpExtract => r }.size).sum == 11)
   }
 
   /** A tree with every shape a listing can get wrong: a file two

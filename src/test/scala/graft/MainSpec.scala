@@ -50,6 +50,96 @@ class MainSpec extends SparkSpec {
     assert(stamped == audited)
   }
 
+  test("a CLI day starts at most 3 Spark jobs; its audit append starts none") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.merge(g, 1, (a: Integer, b: Integer) => a + b))
+    }
+    def inGroup[A](group: String)(body: => A): A = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+    }
+    val env = freshEnv("main_jobs")
+    val cfg = EtlConfig.fromEnv(env).toOption.get
+    val entry = sinks.ProcessingLog.entry("2024-01-15", 1L, 1L, "table_name", 1L, 1L,
+      Seq("events_2024-01-15.csv"), java.sql.Timestamp.valueOf("2024-01-16 00:00:00"))
+    // the first day in a JVM pays for class loading and codegen, not jobs;
+    // it runs outside the groups so the counted day is a steady one
+    assert(Main.run(Seq("--start-date", "2024-01-16"), spark, env, _ => ()) == 0)
+    sc.addSparkListener(listener)
+    val (rc, outLines) =
+      try {
+        val day = inGroup("graft-main-day") {
+          collectOut(o => Main.run(Seq("--start-date", "2024-01-15"), spark, env, o))
+        }
+        inGroup("graft-main-audit")(sinks.ProcessingLog.appendJdbc(Seq(entry), cfg.jdbcLog))
+        day
+      } finally {
+        org.apache.spark.graftspec.SpecBridge.drainListenerBus(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(rc == 0, outLines.mkString("\n"))
+    val dayJobs = Option(jobs.get("graft-main-day")).map(_.toInt).getOrElse(0)
+    assert(dayJobs > 0 && dayJobs <= 3, s"$dayJobs Spark jobs in one CLI day")
+    assert(!jobs.containsKey("graft-main-audit"), s"audit append started ${jobs.get("graft-main-audit")} job(s)")
+    // the per-day funnel line: date first, rows read, duplicates, empty columns
+    val line = outLines.filter(_.startsWith("2024-01-15:"))
+    assert(line.length == 1 && !line.head.contains("FAILED"), outLines.mkString("\n"))
+    val funnel = """2024-01-15: loaded (\d+) rows from 1 file\(s\); read (\d+) rows, removed (\d+) duplicate\(s\), dropped (\d+) empty column\(s\)""".r
+    line.head match {
+      case funnel(loaded, read, dups, empty) =>
+        assert(read.toLong - loaded.toLong == dups.toLong && loaded.toLong > 0L)
+        assert(empty.toInt == 0)
+      case other => fail(s"unexpected day line: $other")
+    }
+  }
+
+  test("the audit table keeps the Spark writer's shape, created or appended to") {
+    def cfg(db: String) = sinks.Sinks.JdbcConfig(
+      s"jdbc:derby:memory:$db;create=true", "data_processing_log", "app", "app")
+    def columns(db: String): Seq[(String, String, Int, String)] = {
+      val c = java.sql.DriverManager.getConnection(cfg(db).url, "app", "app")
+      try {
+        val rs = c.getMetaData.getColumns(null, "APP", "DATA_PROCESSING_LOG", null)
+        val b = Seq.newBuilder[(Int, (String, String, Int, String))]
+        while (rs.next()) b += rs.getInt("ORDINAL_POSITION") -> ((rs.getString("COLUMN_NAME"),
+          rs.getString("TYPE_NAME"), rs.getInt("COLUMN_SIZE"), rs.getString("IS_NULLABLE")))
+        b.result().sortBy(_._1).map(_._2)
+      } finally c.close()
+    }
+    val at = java.sql.Timestamp.valueOf("2024-01-16 08:00:00")
+    val e1 = sinks.ProcessingLog.entry("2024-01-15", 2L, 2L, "table_name", 10L, 5L,
+      Seq("a_2024-01-15.csv", "b_2024-01-15.csv.gz"), at)
+    val e2 = sinks.ProcessingLog.entry("2024-01-16", 1L, 1L, "table_name", 0L, 0L, Seq("c.csv"), at)
+    // the table as the Spark JDBC writer creates it, which every audit row used to go through
+    sinks.Sinks.writeJdbc(sinks.ProcessingLog.toDf(spark, Seq(e1)), cfg("audit_by_writer"))
+    val pinned = Seq(
+      ("date_processed", "TIMESTAMP", 29, "YES"),
+      ("date_of_data", "DATE", 10, "YES"),
+      ("files_processed", "BIGINT", 19, "NO"),
+      ("files_merged", "BIGINT", 19, "NO"),
+      ("table_name", "CLOB", 2147483647, "YES"),
+      ("total_row_count", "BIGINT", 19, "NO"),
+      ("column_count", "BIGINT", 19, "NO"),
+      ("source_files", "CLOB", 2147483647, "YES"))
+    assert(columns("audit_by_writer") == pinned)
+    sinks.ProcessingLog.appendJdbc(Seq(e1), cfg("audit_by_insert"))
+    assert(columns("audit_by_insert") == pinned)
+    sinks.ProcessingLog.appendJdbc(Seq(e2), cfg("audit_by_writer"))
+    assert(columns("audit_by_writer") == pinned)
+    def back(db: String) = {
+      import spark.implicits._
+      sources.Readers.jdbc(spark, cfg(db).url, "data_processing_log", "app", "app")
+        .as[sinks.ProcessingLog.Entry].collect().toSet
+    }
+    assert(back("audit_by_writer") == Set(e1, e2))
+    assert(back("audit_by_insert") == Set(e1))
+  }
+
   test("a day with no files is skipped and accounted, not fatal") {
     val env = freshEnv("main_skip")
     val (rc, outLines) = collectOut(o => Main.run(
