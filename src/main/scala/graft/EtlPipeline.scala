@@ -86,9 +86,11 @@ object EtlPipeline {
     *
     * Sink contract: `sink` runs exactly one action on the frame it is
     * given. The audit row count is an `observe` metric of that action,
-    * so the day is never counted in a pass of its own. One processing
-    * instant, `processedAt` or the time of the call, is stamped on the
-    * rows' `processed_date` and on the entry's `date_processed`. */
+    * so the day is never counted in a pass of its own. A day with no
+    * data row never reaches the sink; its entry counts 0 rows. One
+    * processing instant, `processedAt` or the time of the call, is
+    * stamped on the rows' `processed_date` and on the entry's
+    * `date_processed`. */
   def runDay(
       spark: SparkSession,
       dropDir: String,
@@ -98,14 +100,21 @@ object EtlPipeline {
       processedAt: Option[java.sql.Timestamp] = None): Option[(ProcessingLog.Entry, Day)] = {
     val at = processedAt.getOrElse(new java.sql.Timestamp(System.currentTimeMillis()))
     dayFrame(spark, dropDir, date, at).map { day =>
-      val obs = Observation(s"etl_day_$date")
-      sink(day.frame.observe(obs, count(lit(1)).as("rows")))
+      // a day with no data row has no column: there is nothing to load,
+      // and a writer would have to create a table with no column
+      val rows =
+        if (day.rowsRead == 0L) 0L
+        else {
+          val obs = Observation(s"etl_day_$date")
+          sink(day.frame.observe(obs, count(lit(1)).as("rows")))
+          obs.get("rows").asInstanceOf[Long]
+        }
       val entry = ProcessingLog.entry(
         dateOfData = date,
         filesProcessed = day.files.length.toLong,
         filesMerged = day.files.length.toLong,
         tableName = tableName,
-        totalRows = obs.get("rows").asInstanceOf[Long],
+        totalRows = rows,
         columnCount = day.frame.columns.length.toLong,
         sourceFiles = day.files.map(_._2),
         processedAt = at)

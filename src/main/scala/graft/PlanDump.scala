@@ -29,7 +29,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * drain reads — plus the returned frame's own plan. Streaming's
   * internal micro-batch plans for non-foreachBatch sinks don't cross
   * the listener; what does cross it is exactly the code this repo
-  * owns, which is what a diff needs to attribute a mover.
+  * owns, which is what a diff needs to attribute a mover. Each distinct
+  * captured plan counts once, so the number of micro-batches a run
+  * happens to execute does not move the fingerprint.
   *
   *   sbt "runMain graft.PlanDump /root/testdata/sf0.01 PLANS.json"
   */
@@ -75,10 +77,17 @@ object PlanDump {
         ()
       } catch { case _: Throwable => Thread.sleep(2000) }
 
+    // each DISTINCT captured plan counts once: a stream gate runs a
+    // number of micro-batches that varies from run to run, and their
+    // plans repeat
     class CaptureListener extends QueryExecutionListener {
-      val counts = scala.collection.mutable.Map[String, Int]()
+      val plans = scala.collection.mutable.Set[Map[String, Int]]()
       private def add(qe: QueryExecution): Unit = synchronized {
-        try countInto(counts, qe.executedPlan) catch { case _: Throwable => () }
+        try {
+          val counts = scala.collection.mutable.Map[String, Int]()
+          countInto(counts, qe.executedPlan)
+          plans += counts.toMap
+        } catch { case _: Throwable => () }
       }
       override def onSuccess(funcName: String, qe: QueryExecution,
                              durationNs: Long): Unit = add(qe)
@@ -98,11 +107,13 @@ object PlanDump {
               try {
                 val df = fn(spark, sfDir) // side effects run HERE
                 drainBus()
-                cap.synchronized {
-                  countInto(cap.counts, df.asInstanceOf[ClassicDataset[_]]
-                    .queryExecution.executedPlan)
-                  render(cap.counts)
-                }
+                val counts = scala.collection.mutable.Map[String, Int]()
+                countInto(counts, df.asInstanceOf[ClassicDataset[_]]
+                  .queryExecution.executedPlan)
+                cap.synchronized(cap.plans.foreach(_.foreach { case (op, c) =>
+                  counts.update(op, counts.getOrElse(op, 0) + c)
+                }))
+                render(counts)
               } finally {
                 drainBus()
                 spark.listenerManager.unregister(cap)

@@ -39,14 +39,59 @@ object VectorExprs {
     * per-row `array<struct<cell:long, half:double, centroid:array<float>>>`
     * (in practice a broadcast one-row centroid table attached by a
     * cross join), returns the `cell` maximizing `emb·centroid − half`
-    * (≡ min L2 when half = |c|²/2), ties to the LOWER cell id — the
-    * identical score expression and tie-break as the former
-    * broadcast-join + `max(struct(s, −cell))` aggregate shape, with no
-    * k-way row fan-out, no hash aggregation and NO exchange. Throws on
-    * a dimension mismatch; null if `emb` or the centroid array is null
-    * or empty. */
+    * (≡ min L2 when half = |c|²/2) in the order of the broadcast-join +
+    * `max(struct(s, −cell))` aggregate it replaced ([[nearestCellOf]]),
+    * with no k-way row fan-out, no hash aggregation and NO exchange.
+    * Throws on a dimension mismatch; null if `emb` or the centroid array
+    * is null or empty. */
   def nearestCell(emb: Column, cents: Column): Column =
     col(NearestCellArgmax(expr(emb), expr(cents)))
+
+  /** The one scalar assignment loop behind [[NearestCellArgmax]]'s
+    * interpreted and generated forms and the driver arm of
+    * `Similarity.kmeansCentroids`: the cell of the greatest score
+    * s = Σ embᵢ·centroidᵢ − half (floats promoted to double, products
+    * accumulated in array order — bit-identical to [[FloatVecDot]]), in
+    * Spark's order of `struct(s, −cell)`: a null score (a null element
+    * on either side, a null `half` or centroid) ranks below every
+    * number, NaN above every number and equal to NaN, −0.0 equals 0.0,
+    * and equal scores go to the lower cell. `cents` must be non-empty;
+    * a centroid whose length differs from `emb`'s throws. */
+  def nearestCellOf(emb: ArrayData, cents: ArrayData): Long = {
+    val k = cents.numElements()
+    val dim = emb.numElements()
+    var bestS = 0.0
+    var bestNull = true
+    var bestC = 0L
+    var j = 0
+    while (j < k) {
+      val c = cents.getStruct(j, 3)
+      val cell = c.getLong(0)
+      var isNull = c.isNullAt(1) || c.isNullAt(2)
+      var acc = 0.0
+      if (!isNull) {
+        val cv = c.getArray(2)
+        if (cv.numElements() != dim) throw new IllegalArgumentException(
+          s"nearest_cell_argmax: centroid dim ${cv.numElements()} != embedding dim $dim")
+        var i = 0
+        while (i < dim && !isNull) {
+          if (emb.isNullAt(i) || cv.isNullAt(i)) isNull = true
+          else acc += emb.getFloat(i).toDouble * cv.getFloat(i).toDouble
+          i += 1
+        }
+      }
+      val s = if (isNull) 0.0 else acc - c.getDouble(1)
+      val cmp =
+        if (isNull || bestNull) (if (isNull == bestNull) 0 else if (isNull) -1 else 1)
+        else if (s == bestS) 0
+        else java.lang.Double.compare(s, bestS)
+      if (j == 0 || cmp > 0 || (cmp == 0 && cell < bestC)) {
+        bestS = s; bestNull = isNull; bestC = cell
+      }
+      j += 1
+    }
+    bestC
+  }
 }
 
 case class FloatVecDot(left: Expression, right: Expression)
@@ -108,14 +153,12 @@ case class FloatVecDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Tight-loop nearest-centroid selection: for each centroid struct
-  * `(cell, half, centroid)` compute s = Σ embᵢ·centroidᵢ − half
-  * (floats promoted to double, products accumulated in array order —
-  * bit-identical to [[FloatVecDot]] minus `half`) and return the cell
-  * with the greatest s, ties to the lower cell id. The centroid count
-  * k is bounded (a coarse quantizer), so the k·dim multiply-adds per
-  * row replace what was a k-way join fan-out plus an argmax aggregate
-  * whose exchange carried one full embedding per input row. */
+/** Tight-loop nearest-centroid selection over a per-row centroid
+  * array: [[VectorExprs.nearestCellOf]] for each row, interpreted and
+  * generated alike. The centroid count k is bounded (a coarse
+  * quantizer), so the k·dim multiply-adds per row replace what was a
+  * k-way join fan-out plus an argmax aggregate whose exchange carried
+  * one full embedding per input row. */
 case class NearestCellArgmax(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -138,84 +181,20 @@ case class NearestCellArgmax(left: Expression, right: Expression)
     }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val emb = a.asInstanceOf[ArrayData]
     val cents = b.asInstanceOf[ArrayData]
-    val k = cents.numElements()
-    if (k == 0) return null
-    val dim = emb.numElements()
-    var bestS = 0.0
-    var bestC = 0L
-    var found = false
-    var j = 0
-    while (j < k) {
-      val c = cents.getStruct(j, 3)
-      val cell = c.getLong(0)
-      val half = c.getDouble(1)
-      val cv = c.getArray(2)
-      if (cv.numElements() != dim) throw new IllegalArgumentException(
-        s"nearest_cell_argmax: centroid dim ${cv.numElements()} != embedding dim $dim")
-      var acc = 0.0
-      var i = 0
-      while (i < dim) {
-        acc += emb.getFloat(i).toDouble * cv.getFloat(i).toDouble
-        i += 1
-      }
-      val s = acc - half
-      if (!found || s > bestS || (s == bestS && cell < bestC)) {
-        bestS = s; bestC = cell; found = true
-      }
-      j += 1
-    }
-    bestC
+    if (cents.numElements() == 0) null
+    else VectorExprs.nearestCellOf(a.asInstanceOf[ArrayData], cents)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val k = ctx.freshName("k")
-      val dim = ctx.freshName("dim")
-      val bestS = ctx.freshName("bestS")
-      val bestC = ctx.freshName("bestC")
-      val found = ctx.freshName("found")
-      val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val cell = ctx.freshName("cell")
-      val half = ctx.freshName("half")
-      val cv = ctx.freshName("cv")
-      val acc = ctx.freshName("acc")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
+    nullSafeCodeGen(ctx, ev, (a, b) =>
       s"""
-         |int $k = $b.numElements();
-         |if ($k == 0) {
+         |if ($b.numElements() == 0) {
          |  ${ev.isNull} = true;
          |} else {
-         |  int $dim = $a.numElements();
-         |  double $bestS = 0.0;
-         |  long $bestC = 0L;
-         |  boolean $found = false;
-         |  for (int $j = 0; $j < $k; $j++) {
-         |    org.apache.spark.sql.catalyst.InternalRow $c = $b.getStruct($j, 3);
-         |    long $cell = $c.getLong(0);
-         |    double $half = $c.getDouble(1);
-         |    org.apache.spark.sql.catalyst.util.ArrayData $cv = $c.getArray(2);
-         |    if ($cv.numElements() != $dim) {
-         |      throw new IllegalArgumentException(
-         |        "nearest_cell_argmax: centroid dim " + $cv.numElements() +
-         |          " != embedding dim " + $dim);
-         |    }
-         |    double $acc = 0.0;
-         |    for (int $i = 0; $i < $dim; $i++) {
-         |      $acc += ((double) $a.getFloat($i)) * ((double) $cv.getFloat($i));
-         |    }
-         |    double $s = $acc - $half;
-         |    if (!$found || $s > $bestS || ($s == $bestS && $cell < $bestC)) {
-         |      $bestS = $s; $bestC = $cell; $found = true;
-         |    }
-         |  }
-         |  ${ev.value} = $bestC;
+         |  ${ev.value} = graft.functions.VectorExprs.nearestCellOf($a, $b);
          |}
-       """.stripMargin
-    })
+       """.stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

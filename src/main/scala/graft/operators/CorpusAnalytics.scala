@@ -1737,21 +1737,74 @@ object CorpusAnalytics {
     * repeatedly (a) count adjacent symbol pairs weighted by word
     * frequency, (b) merge the most frequent pair everywhere, greedy
     * left-to-right (ties broken deterministically: count desc, then
-    * left/right lexicographic).
+    * left/right lexicographic). Words are restricted to `^[a-z]+$` so
+    * the symbol alphabet is closed under the SQL-literal embedding of
+    * learned pairs, and Scala's string order is Spark's.
     *
     * Scale shape: the corpus collapses ONCE into the word-frequency
-    * vocab (hash agg, map-side partials — the only corpus-sized pass);
-    * each of the k iterations then runs on the VOCAB table only: one
-    * partial-aggregated pair count (exchange carries symbol pairs, ≤
-    * vocab·avg_word_len rows), ONE driver row for the argmax (bounded
-    * `limit(1)` collect), and a codegen `aggregate()` fold that applies
-    * the merge per word — no UDFs, no corpus re-scan, and each
-    * iteration is localCheckpoint-cut so lineage stays flat (the E70
-    * PageRank discipline). Words are restricted to `^[a-z]+$` so the
-    * symbol alphabet is closed under the SQL-literal embedding of
-    * learned pairs. */
+    * vocab (hash agg, map-side partials — the only corpus-sized pass),
+    * which is materialized (`localCheckpoint`). The k merge steps then
+    * touch the vocab only. Up to [[BpeDriverWords]] words it is
+    * collected in one job and the steps run in plain Scala
+    * ([[bpeMergesOnDriver]]): a distributed step costs two jobs and two
+    * planning passes, far more than counting pairs over a few hundred
+    * thousand words. Past the bound the steps stay on executors
+    * ([[bpeMergesDistributed]]). */
   def bpeLearn(s: SparkSession, dir: String, steps: Int = 8): DataFrame = {
     import s.implicits._
+    val vocab = bpeVocab(s, dir).localCheckpoint()
+    val merges = collectVocab(vocab).map(bpeMergesOnDriver(_, steps))
+      .getOrElse(bpeMergesDistributed(vocab, steps))
+    merges.toDF("step", "merge_left", "merge_right", "pair_count")
+  }
+
+  /** Driver-arm bound of [[bpeLearn]]: the vocab's word count. */
+  private[graft] val BpeDriverWords: Int = 200000
+
+  /** `vocab`'s (syms, freq) rows when it holds at most
+    * [[BpeDriverWords]] words, from one job. */
+  private def collectVocab(vocab: DataFrame): Option[Seq[(Seq[String], Long)]] =
+    Some(vocab.limit(BpeDriverWords + 1).collect()).filter(_.length <= BpeDriverWords)
+      .map(_.toSeq.map(r => (r.getSeq[String](0), r.getLong(1))))
+
+  /** The driver arm of [[bpeLearn]]: up to `steps` merges
+    * (step, left, right, count) over a collected `(syms, freq)` vocab. */
+  private[graft] def bpeMergesOnDriver(vocab: Seq[(Seq[String], Long)],
+                                       steps: Int): Seq[(Int, String, String, Long)] = {
+    var words = vocab.map { case (syms, f) => (syms.toList, f) }
+    val merges = Seq.newBuilder[(Int, String, String, Long)]
+    var step = 1
+    var done = false
+    while (step <= steps && !done) {
+      val counts = scala.collection.mutable.Map.empty[(String, String), Long]
+      words.foreach { case (syms, f) =>
+        syms.zip(syms.tail).foreach(p => counts(p) = counts.getOrElse(p, 0L) + f)
+      }
+      if (counts.isEmpty) done = true
+      else {
+        val ((l, r), n) = counts.toSeq.minBy { case ((l, r), n) => (-n, l, r) }
+        merges += ((step, l, r, n))
+        def merge(syms: List[String]): List[String] = syms match {
+          case a :: b :: rest if a == l && b == r => (l + r) :: merge(rest)
+          case a :: rest => a :: merge(rest)
+          case Nil => Nil
+        }
+        words = words.map { case (syms, f) => (merge(syms), f) }
+        step += 1
+      }
+    }
+    merges.result()
+  }
+
+  /** The distributed arm of [[bpeLearn]] over a `(syms, freq)` vocab
+    * frame: per step one partial-aggregated pair count (the exchange
+    * carries symbol pairs, ≤ vocab·avg_word_len rows), ONE driver row
+    * for the argmax (bounded `limit(1)` collect), and a codegen
+    * `aggregate()` fold that applies the merge per word — no UDFs, no
+    * corpus re-scan, and each step is localCheckpoint-cut so lineage
+    * stays flat (the E70 PageRank discipline). */
+  private[graft] def bpeMergesDistributed(vocab0: DataFrame,
+                                          steps: Int): Seq[(Int, String, String, Long)] = {
     def applyMergeExpr(l: String, r: String): String =
       s"""aggregate(syms,
          |  named_struct('out', cast(array() as array<string>),
@@ -1766,7 +1819,7 @@ object CorpusAnalytics {
          |                      'carry', x) END,
          |  acc -> CASE WHEN acc.carry IS NULL THEN acc.out
          |              ELSE array_append(acc.out, acc.carry) END)""".stripMargin
-    var vocab = bpeVocab(s, dir).localCheckpoint()
+    var vocab = vocab0
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var step = 1
     var exhausted = false
@@ -1778,7 +1831,9 @@ object CorpusAnalytics {
     // cross join serialized worse than the two small jobs they
     // replaced. The r19 two-job per-step shape stays.
     while (step <= steps && !exhausted) {
-      val top = vocab
+      // a word of fewer than two symbols has no pair (and `syms[i + 1]`
+      // would index past its end)
+      val top = vocab.filter(size(col("syms")) >= 2)
         .select(col("freq"), explode(expr(
           "transform(sequence(0, size(syms) - 2), " +
             "i -> struct(syms[i] AS l, syms[i + 1] AS r))")).as("p"))
@@ -1796,7 +1851,7 @@ object CorpusAnalytics {
         step += 1
       }
     }
-    merges.result().toDF("step", "merge_left", "merge_right", "pair_count")
+    merges.result()
   }
 
   /** Character-symbol word-frequency table the BPE loop iterates on. */
@@ -1811,42 +1866,17 @@ object CorpusAnalytics {
   /** Gate for [[bpeLearn]]: the iterative merge table cannot be
     * expressed in one SQL pass, so (a) the oracle pins STEP 1 exactly
     * (a single argmax over character pairs — SQL-expressible), and
-    * (b) the whole k-step table is replayed by an independent
-    * driver-side implementation over the collected vocab (bounded:
-    * raises past 200k words — the gate's replay is what caps it, not
-    * the distributed loop) and must match step for step. */
+    * (b) the distributed arm's whole k-step table must match the driver
+    * arm's step for step over the same vocab (the gate raises past
+    * [[BpeDriverWords]] words, where the driver arm has no answer). */
   def bpeLearnGate(s: SparkSession, dir: String, steps: Int = 8): DataFrame = {
     import s.implicits._
-    val learned = bpeLearn(s, dir, steps).collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
-    // independent replay: plain Scala over the collected vocab
-    val vocabRows = bpeVocab(s, dir).limit(200001).collect()
-    if (vocabRows.length > 200000)
-      throw new IllegalStateException("bpe_learn_gate replay vocab > 200k words")
-    var vocab = vocabRows.map(r => (r.getSeq[String](0).toList, r.getLong(1)))
-    val replay = Seq.newBuilder[(Int, String, String, Long)]
-    var step = 1
-    var done = false
-    while (step <= steps && !done) {
-      val counts = scala.collection.mutable.Map.empty[(String, String), Long]
-      vocab.foreach { case (syms, f) =>
-        syms.zip(syms.tail).foreach(p => counts(p) = counts.getOrElse(p, 0L) + f)
-      }
-      if (counts.isEmpty) done = true
-      else {
-        val ((l, r), n) = counts.toSeq.minBy { case ((l, r), n) => (-n, l, r) }
-        replay += ((step, l, r, n))
-        def merge(syms: List[String]): List[String] = syms match {
-          case a :: b :: rest if a == l && b == r => (l + r) :: merge(rest)
-          case a :: rest => a :: merge(rest)
-          case Nil => Nil
-        }
-        vocab = vocab.map { case (syms, f) => (merge(syms), f) }
-        step += 1
-      }
-    }
-    val replayed = replay.result()
-    val matches = learned.toSeq == replayed
+    val vocab = bpeVocab(s, dir).localCheckpoint()
+    val learned = bpeMergesDistributed(vocab, steps)
+    val replayed = bpeMergesOnDriver(collectVocab(vocab).getOrElse(
+      throw new IllegalStateException(s"bpe_learn_gate replay vocab > $BpeDriverWords words")),
+      steps)
+    val matches = learned == replayed
     val s1 = learned.headOption.getOrElse((0, "", "", 0L))
     Seq(("bpe_learn", learned.length.toLong, s1._2, s1._3, s1._4, matches))
       .toDF("metric", "n_steps", "step1_left", "step1_right",

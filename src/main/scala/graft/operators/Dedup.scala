@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Deduplication operators for training corpora (SURVEY.md §2 B7 +
   * E1-E4): exact text dedup, MinHash+LSH and SimHash near-dup
@@ -175,16 +176,80 @@ object Dedup {
     * component is a rewrite of the same underlying text, and the keep
     * policy ("retain min id per component") needs the component id.
     *
-    * Iterative min-label propagation on DataFrames: each round every
-    * node adopts the smallest label among itself and its neighbors, so
+    * Output: (id, component) for every id in `pairs`, component = min
+    * id in the connected component.
+    *
+    * Scale shape: the pair list is materialized once (`localCheckpoint`:
+    * the symmetric edge union would otherwise evaluate the pair
+    * pipeline once per branch). When it holds at most
+    * [[ComponentsDriverEdges]] edges of integral, non-null ids, it is
+    * collected in one job and the components come from union-find on
+    * the driver ([[componentsOnDriver]]): near-dup graphs after
+    * verification are small, and each propagation round would cost two
+    * shuffles, a checkpoint job and a planning pass. Larger or other
+    * graphs keep the min-label propagation on executors
+    * ([[componentsDistributed]]), which throws if `maxIter` rounds do
+    * not converge. */
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+    require(maxIter >= 2,
+      "connectedComponents: the fused init round cannot observe its own " +
+        "convergence; maxIter must be >= 2")
+    val p = pairs.select(col("id_a"), col("id_b")).localCheckpoint()
+    // the type of the distributed arm's ids: both columns, widened
+    val idType = p.select(col("id_a")).union(p.select(col("id_b"))).schema.head.dataType
+    val edges = idType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        Some(p.limit(ComponentsDriverEdges + 1).collect())
+          .filter(e => e.length <= ComponentsDriverEdges && !e.exists(_.anyNull))
+      case _ => None
+    }
+    edges.map { e =>
+      val spark = p.sparkSession
+      import spark.implicits._
+      componentsOnDriver(e.map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)))
+        .toSeq.toDF("id", "component")
+        .select(col("id").cast(idType).as("id"), col("component").cast(idType).as("component"))
+    }.getOrElse(componentsDistributed(p, maxIter))
+  }
+
+  /** Driver-arm bound of [[connectedComponents]]: the pair count (16 MB
+    * of long pairs). */
+  private[graft] val ComponentsDriverEdges: Int = 1 << 20
+
+  /** Union-find over `edges`, each root kept at its component's minimum
+    * id (union by min, path halving): (id, component) for every id, by
+    * id. */
+  private[graft] def componentsOnDriver(edges: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var v = x
+      var up = parent.getOrElseUpdate(v, v)
+      while (up != v) {
+        val grand = parent(up)
+        parent(v) = grand
+        v = up
+        up = grand
+      }
+      v
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.toArray.sorted.map(id => (id, find(id)))
+  }
+
+  /** The distributed arm of [[connectedComponents]] over a materialized
+    * pair frame: iterative min-label propagation. Each round every node
+    * adopts the smallest label among itself and its neighbors, so
     * labels converge in O(component diameter) rounds — near-dup
     * components are shallow (a hub document and its variants), so
     * convergence is a handful of rounds even at corpus scale. Each
     * round is one join + one groupBy (two shuffles) and the lineage is
     * cut with `localCheckpoint` so the plan doesn't grow per round.
     * Throws if `maxIter` rounds don't converge rather than returning
-    * partial clusters; maxIter must be ≥ 2 (the fused init counts as
-    * round 1 and cannot observe its own convergence — ADVICE r19).
+    * partial clusters; the fused init counts as round 1 and cannot
+    * observe its own convergence, so `maxIter` ≥ 2 (ADVICE r19).
     *
     * NOTE (r20, tried and REVERTED): chaining TWO propagation rounds
     * per job (the second doubling as the convergence proof, so the
@@ -193,18 +258,8 @@ object Dedup {
     * 2.25-2.4 s → 2.5-2.6 s): the un-materialized round-k labels
     * appear twice in the fused plan (neighbor-min side + node side),
     * and the duplicated subtree's extra stages cost more than the one
-    * removed job-floor. The one-round-per-job shape stays.
-    *
-    * Output: (id, component) for every id in `pairs`, component = min
-    * id in the connected component. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    require(maxIter >= 2,
-      "connectedComponents: the fused init round cannot observe its own " +
-        "convergence; maxIter must be >= 2")
-    // materialize the (possibly expensive) pair pipeline ONCE — the
-    // symmetric edge union would otherwise evaluate everything above
-    // the last exchange in `pairs` once per branch
-    val p = pairs.select(col("id_a"), col("id_b")).localCheckpoint()
+    * removed job-floor. The one-round-per-job shape stays. */
+  private[graft] def componentsDistributed(p: DataFrame, maxIter: Int): DataFrame = {
     val edges = p.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(p.select(col("id_b").as("src"), col("id_a").as("dst")))
     // fused round 1 (r19): with identity labels, the first round's

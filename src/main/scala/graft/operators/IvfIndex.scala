@@ -56,8 +56,8 @@ object IvfIndex {
   /** Initial build: train the coarse quantizer on the seed batch
     * (deterministic bounded k-means, [[Similarity.kmeansCentroids]]),
     * publish it, and fold the seed as the first assignment batch.
-    * Returns the trained centroid frame (already materialized by the
-    * trainer's localCheckpoint) so callers/specs can compare the
+    * Returns the trained centroid frame (already materialized: a local
+    * frame or the trainer's localCheckpoint) so callers/specs can compare the
     * published round-trip against THESE floats — retraining would race
     * aggregate summation order, the E7c lesson. */
   def build(s: SparkSession, root: String, seed: DataFrame,

@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.functions.VectorExprs
 
 /** Embedding similarity operators (SURVEY.md §2 E5-E7): cosine
@@ -284,18 +288,15 @@ object Similarity {
       math.max(1L, (n + targetCellSize - 1) / targetCellSize)).toInt
 
   /** Deterministic k-means (Lloyd, fixed iterations) returning the
-    * centroids as a DataFrame `(cell: long, centroid: array<float>)` —
-    * the driver NEVER materializes k·dim values, so k can grow with
-    * the corpus (k ≈ 10⁵ × dim ≈ 10³ stays on executors). Seeds are
-    * the k vectors with the smallest `xxhash64(vec_id)` — a
+    * centroids as a DataFrame `(cell: long, centroid: array<float>)`.
+    * Seeds are the k vectors with the smallest `xxhash64(vec_id)` — a
     * deterministic uniform sample, immune to sorted/clustered id
-    * layouts that made lowest-id seeding degenerate. Each Lloyd step
-    * is fully distributed: assignment via [[assignCells]] (broadcast
-    * centroid array + codegen argmax projection — no exchange, r20),
-    * the new means aggregated
-    * per (cell, dimension) into a k-row frame that is
-    * `localCheckpoint`ed to break the iterative lineage. Cells that
-    * lose every member keep their previous centroid.
+    * layouts that made lowest-id seeding degenerate. Each round
+    * assigns every vector by the score max (v·c − |c|²/2) with ties to
+    * the lower cell ([[graft.functions.VectorExprs.nearestCellOf]]),
+    * and a cell's new centroid is the double `avg` of its members per
+    * dimension, cast to float. Cells that lose every member keep their
+    * previous centroid.
     *
     * Training is BOUNDED: when the corpus exceeds `maxTrain`, Lloyd
     * runs on a deterministic xxhash64(vec_id) sample of ~max(maxTrain,
@@ -303,11 +304,23 @@ object Similarity {
     * production IVF build) — per-iteration cost then caps at
     * O(maxTrain·k·dim) no matter how large the corpus grows, while the
     * FINAL full-corpus assignment stays with the caller. Pass `n` if
-    * the caller already counted the corpus, else it is counted here. */
+    * the caller already counted the corpus, else it is counted here;
+    * pass `dim` (the largest embedding length) if the caller knows it,
+    * else [[embeddingDim]] probes it.
+    *
+    * Scale shape: two arms, the same centroids. When the training set
+    * holds at most [[KmeansDriverFloats]] floats and a round at most
+    * [[KmeansDriverMultiplyAdds]] multiply-adds, it is collected in one
+    * job ([[kmeansOnDriver]]) and every round runs in plain Scala:
+    * at that size a distributed round is mostly its jobs and planning
+    * passes (seeds, assignment, means, checkpoint), not its arithmetic.
+    * Past either bound the rounds stay on executors
+    * ([[kmeansDistributed]]), so k·dim can grow with the corpus and the
+    * driver never holds the training set. */
   def kmeansCentroids(vecs: DataFrame, k: Int, iters: Int = 3,
                       embCol: String = "embedding",
-                      maxTrain: Long = 100000L, n: Long = -1L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+                      maxTrain: Long = 100000L, n: Long = -1L,
+                      dim: Option[Int] = None): DataFrame = {
     val all = vecs.select(col("vec_id"), col(embCol).as("__emb"))
     val total = if (n >= 0) n else all.count()
     val cap = math.max(maxTrain, 4L * k)
@@ -318,6 +331,113 @@ object Similarity {
         val num = math.min(den, den * cap / total + 1)
         all.filter(pmod(xxhash64(col("vec_id")), lit(den)) < lit(num))
       }
+    val integralId = base.schema("vec_id").dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    val d = math.max(1, dim.orElse(embeddingDim(base, "__emb")).getOrElse(1))
+    val rowCap = math.min(KmeansDriverFloats / d,
+      KmeansDriverMultiplyAdds / (d.toLong * math.max(k, 1)))
+    val rows =
+      if (!integralId || rowCap < 1) None
+      else Some(trainingRows(base, (rowCap + 1).toInt))
+    rows.filter(r => r.length <= rowCap &&
+        r.iterator.map(x => if (x.isNullAt(2)) 0L else x.getSeq[Any](2).length.toLong).sum <=
+          KmeansDriverFloats)
+      .map(kmeansOnDriver(vecs.sparkSession, _, k, iters))
+      .getOrElse(kmeansDistributed(base, k, iters))
+  }
+
+  /** Driver-arm bound on the training set: n·dim floats (32 MB). */
+  private[graft] val KmeansDriverFloats: Long = 8L << 20
+
+  /** Driver-arm bound on one round's work: n·k·dim multiply-adds, a few
+    * tenths of a second on one driver thread — the order of what a
+    * distributed round's jobs and planning cost (an estimate, not a
+    * measured crossover). */
+  private[graft] val KmeansDriverMultiplyAdds: Long = 1L << 28
+
+  private val CentroidSchema = StructType(Seq(
+    StructField("cell", LongType, nullable = false),
+    StructField("centroid", ArrayType(FloatType, containsNull = true), nullable = true)))
+
+  private def arrayData(xs: Seq[java.lang.Float]): ArrayData =
+    if (xs.contains(null)) new GenericArrayData(xs.toArray[Any])
+    else UnsafeArrayData.fromPrimitiveArray(xs.map(_.floatValue).toArray)
+
+  /** At most `limit` rows of a `(vec_id, __emb)` training set with an
+    * integral `vec_id`, as the driver arm reads them: `(vec_id: long,
+    * xxhash64(vec_id), __emb)` in scan order. */
+  private[graft] def trainingRows(base: DataFrame, limit: Int): Array[Row] =
+    base.select(col("vec_id").cast("long"), xxhash64(col("vec_id")), col("__emb"))
+      .limit(limit).collect()
+
+  /** The driver arm of [[kmeansCentroids]] over its collected training
+    * set ([[trainingRows]]): the same seeds (the k smallest (hash,
+    * vec_id)), the same assignment loop, and each mean summed in scan
+    * order as Spark's `avg` sums one partition — so on a one-partition
+    * input the centroids are bit-identical to [[kmeansDistributed]]'s.
+    * A null embedding joins no cell; a null element is skipped by its
+    * dimension's mean. Returns a local frame. */
+  private[graft] def kmeansOnDriver(spark: SparkSession, rows: Array[Row],
+                                    k: Int, iters: Int): DataFrame = {
+    val vecs = rows.map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)), r.getLong(1),
+      if (r.isNullAt(2)) null else arrayData(r.getSeq[java.lang.Float](2))))
+    val seedOrder = Ordering.Tuple2(Ordering.Long, Ordering.Option(Ordering.Long))
+    val seeds = vecs.sortBy(v => (v._2, v._1))(seedOrder).take(k)
+    var cents: Array[(Long, ArrayData)] = seeds.zipWithIndex.map { case (v, i) => (i.toLong, v._3) }
+    for (_ <- 1 to iters if cents.nonEmpty) {
+      val table = new GenericArrayData(cents.map { case (c, v) => InternalRow(c, half(v), v) })
+      val sums = scala.collection.mutable.Map.empty[Long, (Array[Double], Array[Long])]
+      vecs.foreach { case (_, _, e) =>
+        // an empty vector is assigned (and checked) but adds no mean
+        val cell = if (e == null) None else Some(VectorExprs.nearestCellOf(e, table))
+        if (cell.isDefined && e.numElements() > 0) {
+          val (sum, cnt) = sums.getOrElseUpdate(cell.get,
+            (new Array[Double](e.numElements()), new Array[Long](e.numElements())))
+          var i = 0
+          while (i < e.numElements()) {
+            if (!e.isNullAt(i)) { sum(i) += e.getFloat(i).toDouble; cnt(i) += 1 }
+            i += 1
+          }
+        }
+      }
+      cents = cents.map { case (c, old) =>
+        sums.get(c).fold((c, old)) { case (sum, cnt) =>
+          (c, new GenericArrayData(sum.indices.map(i =>
+            if (cnt(i) == 0) null else java.lang.Float.valueOf((sum(i) / cnt(i).toDouble).toFloat)
+          ).toArray[Any]))
+        }
+      }
+    }
+    spark.createDataFrame(java.util.Arrays.asList(cents.map { case (c, v) =>
+      Row(c, if (v == null) null else Seq.tabulate[java.lang.Float](v.numElements())(i =>
+        if (v.isNullAt(i)) null else java.lang.Float.valueOf(v.getFloat(i))))
+    }: _*), CentroidSchema)
+  }
+
+  /** `assignCells`' half = |c|²/2 as [[graft.functions.FloatVecDot]]
+    * sums it: null for a null centroid or a null element. */
+  private def half(v: ArrayData): Any = {
+    if (v == null) return null
+    var acc = 0.0
+    var i = 0
+    while (i < v.numElements()) {
+      if (v.isNullAt(i)) return null
+      acc += v.getFloat(i).toDouble * v.getFloat(i).toDouble
+      i += 1
+    }
+    acc / 2.0
+  }
+
+  /** The distributed arm of [[kmeansCentroids]] over its training set
+    * `(vec_id, __emb)`: each Lloyd step assigns via [[assignCells]]
+    * (broadcast centroid array + codegen argmax projection — no
+    * exchange, r20) and aggregates the new means per (cell, dimension)
+    * into a k-row frame that is `localCheckpoint`ed to break the
+    * iterative lineage. The driver never materializes k·dim values. */
+  private[graft] def kmeansDistributed(base: DataFrame, k: Int, iters: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy(col("__h"), col("vec_id")) // ≤ k rows
     var cents = base
       .withColumn("__h", xxhash64(col("vec_id")))
@@ -389,10 +509,13 @@ object Similarity {
               nCells: Int = 0, nProbe: Int = 0, iters: Int = 3,
               targetCellSize: Long = 64L): DataFrame = {
     val c0 = corpus.select(col("vec_id"), col("embedding"))
-    val nCorpus = c0.count()
+    // the corpus size and the largest embedding length, in one job
+    val stats = c0.agg(count(lit(1)), max(size(col("embedding")))).head()
+    val nCorpus = stats.getLong(0)
     val kCells = if (nCells > 0) nCells else cellCount(nCorpus, targetCellSize)
     val probe = if (nProbe > 0) nProbe else math.max(4, (kCells + 1) / 2)
-    val cents = kmeansCentroids(c0, kCells, iters, n = nCorpus)
+    val cents = kmeansCentroids(c0, kCells, iters, n = nCorpus,
+      dim = if (stats.isNullAt(1)) None else Some(stats.getInt(1)))
     val indexed = assignCells(c0, cents).withColumn("c_nrm", norm("embedding"))
     ivfSearch(queries, cents, indexed, k, probe)
   }

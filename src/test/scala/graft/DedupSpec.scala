@@ -77,10 +77,11 @@ class DedupSpec extends SparkSpec {
 
   test("connected components raise instead of returning partial clusters") {
     import spark.implicits._
-    // a path graph of length 9 has diameter 9 → cannot converge in 2 rounds
+    // a path graph of length 9 has diameter 9 → the distributed arm
+    // cannot converge in 2 rounds (the driver arm's union-find has none)
     val chain = (1L to 9L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     assertThrows[IllegalStateException](
-      Dedup.connectedComponents(chain, maxIter = 2).collect())
+      Dedup.componentsDistributed(chain, maxIter = 2).collect())
   }
 
   test("simhash finds planted near-dups within hamming budget") {

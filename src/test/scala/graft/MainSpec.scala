@@ -166,6 +166,24 @@ class MainSpec extends SparkSpec {
     assert(outLines.exists(_.contains("Successfully processed 1 out of 2 days")))
   }
 
+  test("a header-only first day into a fresh warehouse loads nothing and is audited") {
+    val drop = java.nio.file.Files.createTempDirectory("graft_main_header_only")
+    java.nio.file.Files.write(drop.resolve("feed_2024-03-01.csv"), "id,v\n".getBytes("UTF-8"))
+    java.nio.file.Files.write(drop.resolve("feed_2024-03-02.csv"), "id,v\n1,a\n2,b\n".getBytes("UTF-8"))
+    val env = freshEnv("main_header_only") + ("GRAFT_DROP_DIR" -> drop.toString)
+    val (rc, outLines) = collectOut(o => Main.run(
+      Seq("--start-date", "2024-03-01", "--end-date", "2024-03-02"), spark, env, o))
+    assert(rc == 0, outLines.mkString("\n"))
+    assert(outLines.exists(_.startsWith("2024-03-01: loaded 0 rows from 1 file(s)")), outLines.mkString("\n"))
+    assert(outLines.exists(_.contains("Successfully processed 2 out of 2 days")))
+    val log = sources.Readers.jdbc(spark, env("GRAFT_JDBC_URL"), "data_processing_log", "app", "app")
+      .select(col("date_of_data").cast("string"), col("total_row_count")).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(log == Map("2024-03-01" -> 0L, "2024-03-02" -> 2L))
+    val loaded = sources.Readers.jdbc(spark, env("GRAFT_JDBC_URL"), "table_name", "app", "app")
+    assert(loaded.select(col("id")).collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 2))
+  }
+
   test("--analyze-dates prints the drop histogram and exits 0") {
     val env = freshEnv("main_analyze")
     val (rc, outLines) = collectOut(o =>

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 import graft.operators.Similarity
 
 class SimilaritySpec extends SparkSpec {
@@ -194,13 +196,26 @@ class SimilaritySpec extends SparkSpec {
       (2L, Array(0f, 1f)),   // tie pair for [0, 0]
       (3L, Array(0f, -1f))
     ).toDF("cell", "centroid")
-    val vs = Seq(
-      (10L, Array(1f, 0f)),  // clear winner: cell 0
-      (11L, Array(0f, 0f)),  // all dots 0 → argmax by −half → cell 1 (half 0.25)
-      (12L, Array(-1f, 0f))  // dots: −1, −0.5, 0, 0 → cells 2,3 tie at −0.5 → 2
-    ).toDF("vec_id", "embedding")
+    val vs = spark.createDataFrame(java.util.Arrays.asList(Seq[(Long, Seq[java.lang.Float])](
+      (10L, Seq(1f, 0f)),    // clear winner: cell 0
+      (11L, Seq(0f, 0f)),    // all dots 0 → argmax by −half → cell 1 (half 0.25)
+      (12L, Seq(-1f, 0f)),   // dots: −1, −0.5, 0, 0 → cells 2,3 tie at −0.5 → 2
+      (13L, Seq(Float.NaN, 0f)),  // every score NaN: a tie → cell 0
+      // scores Inf, Inf, NaN, NaN: NaN ranks above Inf → cells 2,3 tie → 2
+      (14L, Seq(Float.PositiveInfinity, 0f)),
+      (15L, Seq(null, 1f)),  // a null element: every score null → cell 0
+      (16L, Seq(1f, null))
+    ).map { case (id, v) => org.apache.spark.sql.Row(id, v) }: _*),
+      org.apache.spark.sql.types.StructType.fromDDL("vec_id BIGINT, embedding ARRAY<FLOAT>"))
     val got = Similarity.assignCells(vs, cents)
       .select("vec_id", "cell").as[(Long, Long)].collect().toMap
+    // the interpreted form (`eval`, no codegen) picks the same cells
+    val table = cents.agg(array_sort(collect_list(struct(col("cell"),
+      (graft.functions.VectorExprs.floatDot(col("centroid"), col("centroid")) / lit(2.0)).as("half"),
+      col("centroid")))))
+    val tableLit = Literal.create(table.collect().head.get(0), table.schema.head.dataType)
+    val interpreted = vs.collect().map(r => r.getLong(0) -> graft.functions.NearestCellArgmax(
+      Literal.create(r.get(1), ArrayType(FloatType)), tableLit).eval()).toMap
     // reference: the pre-r20 broadcast-join + max(struct(s, −cell)) shape
     val centsP = cents.select(col("cell").as("__cell"), col("centroid"),
         (graft.functions.VectorExprs.floatDot(col("centroid"), col("centroid")) / lit(2.0)).as("__half"))
@@ -214,7 +229,8 @@ class SimilaritySpec extends SparkSpec {
       .select(col("vec_id"), (-col("__b").getField("neg_cell")).cast("long").as("cell"))
       .as[(Long, Long)].collect().toMap
     assert(got == ref, s"got $got vs ref $ref")
-    assert(got == Map(10L -> 0L, 11L -> 1L, 12L -> 2L))
+    assert(interpreted == ref, s"interpreted $interpreted vs ref $ref")
+    assert(got == Map(10L -> 0L, 11L -> 1L, 12L -> 2L, 13L -> 0L, 14L -> 2L, 15L -> 0L, 16L -> 0L))
   }
 
   test("kmeans trains on a bounded hash-sample when the corpus exceeds maxTrain") {
