@@ -3,8 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   /** Queries that measure scratch I/O (they write parquet/bucketed
     * tables/Derby and read them back) — benched under their own
-    * section, and excluded from plan fingerprinting (building their
-    * DataFrame executes the side effects). Shared with [[PlanDump]]. */
+    * section. */
   val sinkGateNames: Set[String] = Set(
     "compact_gate", "idempotent_load_gate", "etl_audit_gate",
     "upsert_gate", "exactly_once_jdbc_gate", "zorder_gate",
@@ -20,20 +19,15 @@ object Bench {
       .getOperatingSystemMXBean.getSystemLoadAverage
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession(s"local[$cpus]", Some("WARN"),
+      "spark.sql.shuffle.partitions" -> cpus,
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       // the generated-class cache defaults to 100 entries; with 160+
       // registered queries the cold pass evicts earlier entries before
       // the steady pass reruns them, and the "steady" time silently
       // re-pays Janino compiles (the phantom cost the per-query warm-up
       // exists to exclude). Size it to hold every query's codegen units.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.codegen.cache.maxEntries" -> "10000")
     // Untimed warm-up against the BENCHMARKED dataset so the first
     // timed query doesn't absorb JVM/JIT, codegen-cache, file-listing,
     // or parquet-footer costs for sfDir.
@@ -74,8 +68,7 @@ object Bench {
     //   scan: lineitem groupBy(flag,status) 3-agg — parquet scan +
     //         one hash exchange; tracks the I/O + shuffle floor.
     // Any future cross-round comparison divides the two rounds'
-    // calibration floors to get the machine factor FROM THE ARTIFACTS
-    // (tools/bench_regress.py applies it automatically).
+    // calibration floors to get the machine factor FROM THE ARTIFACTS.
     def calibrate(): (Double, Double) = {
       import org.apache.spark.sql.functions._
       def minOf3(body: => Unit): Double = {
@@ -154,7 +147,7 @@ object Bench {
     }
     // per-query telemetry: (median, min, GC ms across the reps, used
     // heap MB after). The r13 judge traced an 8x in-bench drift on
-    // quality_deciles (plans unchanged, fresh-JVM ProbeOne 0.5 s) to
+    // quality_deciles (plans unchanged, 0.5 s alone in a fresh JVM) to
     // bench-JVM neighbor state; these fields make that class of drift
     // attributable from the artifact instead of a round of archaeology.
     case class QT(med: Double, min: Double, gcMs: Long, heapMb: Long)

@@ -160,13 +160,8 @@ object Main {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
-      .appName("graft-etl")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(sys.env.getOrElse("GRAFT_MASTER", "local[*]"),
+      Some("WARN"), "spark.app.name" -> "graft-etl")
     val rc = try run(args.toSeq, spark, sys.env) finally spark.stop()
     if (rc != 0) sys.exit(rc)
   }

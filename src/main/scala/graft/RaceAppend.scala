@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Multi-PROCESS commit-race driver for the graft-atomic sink: one JVM
@@ -16,12 +15,8 @@ object RaceAppend {
   def main(args: Array[String]): Unit = {
     val Array(root, who, nStr) = args.take(3)
     val n = nStr.toInt
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("local[2]", Some("ERROR"),
+      "spark.sql.shuffle.partitions" -> "2")
     try {
       (0 until n).foreach { i =>
         spark.range(0, 1, 1, 1).select(

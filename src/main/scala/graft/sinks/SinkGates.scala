@@ -419,7 +419,7 @@ object SinkGates {
     val filesBefore = partFiles()
     val audit = Sinks.purgeKeys(s, table, "user_id", purge, "day")
     // null-safe: on a dataset where no row carries a purge key (e.g. a
-    // MakeSlice dir whose user_id % m filter drops users 7 and 42) the
+    // sliced dir whose user_id % m filter drops users 7 and 42) the
     // audit is empty and a bare sum() returns NULL
     val removed = audit.agg(coalesce(sum(col("rows_removed")), lit(0L)))
       .head().getLong(0)

@@ -51,4 +51,10 @@ object PlanBridge {
               partitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning)
       : org.apache.spark.sql.execution.SparkPlan =
     org.apache.spark.sql.execution.RDDScanExec(output, rdd, name, partitioning)
+
+  /** Block until every event posted so far has reached every listener
+    * (`listenerBus` is `private[spark]`). Listener events, query
+    * execution callbacks included, are delivered asynchronously. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

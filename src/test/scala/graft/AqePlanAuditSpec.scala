@@ -25,17 +25,23 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
   *  3. a query whose static plan had whole-stage codegen keeps at
   *     least one codegen span in the final plan.
   *
-  * Query set = the 20 most expensive headline queries by the round-12
-  * bench floor (sink/stream gates excluded: building their frame runs
-  * side effects) — the queries where a silent AQE flip would cost the
-  * most at scale. */
+  * Query set = the most expensive headline queries by the round-12
+  * bench floor plus the skew/shuffle cohort (sink/stream gates
+  * excluded: building their frame runs side effects) — the queries
+  * where a silent AQE flip would cost the most at scale. */
 class AqePlanAuditSpec extends SparkSpec {
 
-  private val expensive = (graft.AqePlanDump.Cohort ++ Seq(
-    // spec-only additions beyond the committed-artifact cohort
+  private val expensive = Seq(
+    "dedup_embedding", "canonical_docs", "dedup_clusters", "dedup_minhash",
+    "similarity_prefix_join", "doc_pagerank", "record_linkage",
+    "token_budget", "source_interleave", "tfidf_top", "q_mad",
+    "q_weighted_median", "q_weighted_quantiles", "paragraph_dedup",
+    "cdc_chunk_dedup", "dedup_bow", "kn_bigram_lm", "bpe_pair_counts",
+    "date_extract_custom", "dup_ngram_ratio",
+    "q_range_join_binned", "cross_source_dup",
+    "q_big_join", "q_salted_join", "q_star_join", "q_topk_per_key",
     "contamination_score", "boilerplate_score", "semdedup",
-    "source_novelty", "ann_ivf", "q_quantile_interp", "fk_integrity"))
-    .distinct
+    "source_novelty", "ann_ivf", "q_quantile_interp", "fk_integrity")
 
   /** Same as PlanAuditSweepSpec: empty since r17 — dedup_embedding's
     * exact form is the banded equi-join, so no query needs the

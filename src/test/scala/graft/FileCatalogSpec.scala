@@ -88,7 +88,7 @@ class FileCatalogSpec extends SparkSpec {
           .map(r => Option(r.getAs[String]("extracted_date")) -> r.getAs[Long]("n_files")).toMap)
       finally {
         sc.clearJobGroup()
-        org.apache.spark.graftspec.SpecBridge.drainListenerBus(sc)
+        org.apache.spark.sql.graftfn.PlanBridge.drainListenerBus(sc)
         sc.removeSparkListener(listener)
       }
     assert(paths.map(_._2) == Seq("events_2024-01-16.csv.gz"))

@@ -79,7 +79,7 @@ class MainSpec extends SparkSpec {
         inGroup("graft-main-audit")(sinks.ProcessingLog.appendJdbc(Seq(entry), cfg.jdbcLog))
         day
       } finally {
-        org.apache.spark.graftspec.SpecBridge.drainListenerBus(sc)
+        org.apache.spark.sql.graftfn.PlanBridge.drainListenerBus(sc)
         sc.removeSparkListener(listener)
       }
     assert(rc == 0, outLines.mkString("\n"))

@@ -143,7 +143,7 @@ class R13OpsSpec extends SparkSpec {
   // The r13 rep-2 failure: a fixed scratch path + cached permissive read
   // left the second same-JVM invocation reading a stale cache missing
   // bad_rows.csv (replay threw ROW_VALUE_IS_NULL; the A4b gate would have
-  // silently returned n_quarantined=0). ProbeOne only counts rows, so
+  // silently returned n_quarantined=0). A row count alone misses that, so
   // this pins the VALUES of both gates across two same-JVM runs.
   test("quarantine gates: identical correct values on re-execution") {
     def runBoth(): (Seq[Any], Seq[Any]) = (

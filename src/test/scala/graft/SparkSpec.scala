@@ -5,14 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole forked test JVM. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession("local[4]", None,
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.warehouse.dir" -> "/tmp/graft_warehouse")
 }
 
 abstract class SparkSpec extends AnyFunSuite {
