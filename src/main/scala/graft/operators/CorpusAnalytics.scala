@@ -968,13 +968,17 @@ object CorpusAnalytics {
     * Determinism: each neighbor contribution r(u)/deg(u) is one IEEE
     * division pinned to DECIMAL(28,12) BEFORE the order-sensitive
     * per-node sum (the D44 discipline), so every iteration is
-    * bit-identical across engines and partitionings. Scale shape: the
-    * classic distributed PageRank — each iteration is one join of the
-    * rank vector against the edge list keyed by node + one
-    * partial-aggregated groupBy; the edge list shuffles once and is
-    * reused. */
+    * bit-identical across engines, partitionings and both arms below.
+    *
+    * Scale shape: the edge build (gram explode, rare filter, self-join)
+    * is materialized once (`localCheckpoint`). When it holds at most
+    * [[PagerankDriverEdges]] edges of integral, non-null ids, the edges
+    * are collected in one job and the `iters` rounds run on the driver
+    * ([[pagerankOnDriver]]): a rare-gram graph is small next to its
+    * corpus, and each distributed round costs a join, a partial
+    * aggregate and a planning pass. Larger or other graphs keep the
+    * classic distributed PageRank ([[pagerankDistributed]]). */
   def docPagerank(s: SparkSession, dir: String, iters: Int = 3): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     // 128-bit gram identities from the shared [[GramTable]] pass
     // (per-doc distinct by construction, ≥5-token docs only — the
     // exact membership relation this operator shingled inline before).
@@ -989,18 +993,84 @@ object CorpusAnalytics {
     val member = grams.join(rare, Seq("h1", "h2"))
       .select(col("h1"), col("h2"), col("doc_id"))
     // localCheckpoint: the gram-explode + rare-filter + self-join
-    // pipeline above feeds deg AND every unrolled iteration AND the
-    // final join (iters+2 consumers) — without the cut each consumer
-    // recomputes the whole edge build unless ReusedExchange happens to
-    // cover the structurally identical subtrees (the §4 rule
-    // similarity_prefix_join paid 9.5→2.4 s to learn); deg is cut too
-    // since it is itself consumed iters+1 times
+    // pipeline above feeds the collect or, past the bound, deg AND
+    // every unrolled iteration (iters+2 consumers) — without the cut
+    // each consumer recomputes the whole edge build
     val edges = member.select(col("h1"), col("h2"), col("doc_id").as("a"))
       .join(member.select(col("h1"), col("h2"), col("doc_id").as("b")), Seq("h1", "h2"))
       .filter(col("a") =!= col("b"))
       .select(col("a").as("src"), col("b").as("dst"))
       .distinct()
       .localCheckpoint()
+    pagerank(edges, iters)
+      .select(col("doc_id"), col("deg"), round(col("r"), 6).as("pagerank"))
+  }
+
+  /** Driver-arm bound of [[docPagerank]]: the edge count (16 MB of long
+    * pairs). */
+  private[graft] val PagerankDriverEdges: Int = 1 << 20
+
+  /** Unrounded PageRank `(doc_id, deg, r)` over a materialized
+    * `(src, dst)` edge frame: on the driver within
+    * [[PagerankDriverEdges]] integral, non-null edges, else distributed.
+    * Both arms return the same columns, types and nullability. */
+  private[graft] def pagerank(edges: DataFrame, iters: Int): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val e = edges.select(col("src"), col("dst"))
+    val integral = e.schema.forall(f => Seq(ByteType, ShortType, IntegerType, LongType)
+      .contains(f.dataType))
+    val collected = if (!integral) None
+      else Some(e.limit(PagerankDriverEdges + 1).collect())
+        .filter(rs => rs.length <= PagerankDriverEdges && !rs.exists(_.anyNull))
+    collected.map { rs =>
+      val ranks = pagerankOnDriver(
+        rs.map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)), iters)
+      // the distributed arm's doc_id is its dst column
+      val schema = StructType(Seq(StructField("doc_id", LongType, e.schema("dst").nullable),
+        StructField("deg", LongType, nullable = false), StructField("r", DoubleType)))
+      edges.sparkSession.createDataFrame(
+          java.util.Arrays.asList(ranks.map { case (n, d, r) => Row(n, d, r) }: _*), schema)
+        .select(col("doc_id").cast(e.schema("dst").dataType).as("doc_id"), col("deg"), col("r"))
+    }.getOrElse(pagerankDistributed(e, iters))
+  }
+
+  /** The driver arm of [[pagerank]]: `iters` rounds of
+    * r ← 0.15 + 0.85·Σ r(u)/deg(u) over `edges` as a multiset, with the
+    * distributed arm's inner-join semantics (round k ranks the `dst`s
+    * of edges whose `src` has a rank from round k−1; round 0 ranks
+    * every `src` at 1.0). Each contribution is pinned to
+    * DECIMAL(28,12) HALF_UP with Spark's own `Decimal`, as `Cast` does,
+    * and summed exactly, so every rank is bit-identical to the
+    * distributed arm's. Returns (node, deg, r) for the ranked nodes that
+    * have out-edges, by node. */
+  private[graft] def pagerankOnDriver(edges: Array[(Long, Long)],
+                                      iters: Int): Array[(Long, Long, Double)] = {
+    import org.apache.spark.sql.types.Decimal
+    val deg = edges.groupMapReduce(_._1)(_ => 1L)(_ + _)
+    var rank: collection.Map[Long, Double] = deg.map { case (n, _) => n -> 1.0 }
+    (1 to iters).foreach { _ =>
+      val sums = scala.collection.mutable.HashMap.empty[Long, Decimal]
+      edges.foreach { case (src, dst) =>
+        rank.get(src).foreach { r =>
+          val c = Decimal(r / deg(src).toDouble)
+          if (!c.changePrecision(28, 12)) throw new ArithmeticException(
+            s"pagerank contribution $c overflows DECIMAL(28,12)")
+          sums(dst) = sums.get(dst).fold(c)(_ + c)
+        }
+      }
+      rank = sums.map { case (n, sum) => n -> (0.15 + 0.85 * sum.toDouble) }
+    }
+    rank.keys.filter(deg.contains).toArray.sorted.map(n => (n, deg(n), rank(n)))
+  }
+
+  /** The distributed arm of [[pagerank]]: each iteration is one join of
+    * the rank vector against the edge list keyed by node plus one
+    * partial-aggregated groupBy, unrolled; the edge list shuffles once
+    * and is reused. */
+  private[graft] def pagerankDistributed(edges: DataFrame, iters: Int): DataFrame = {
+    import org.apache.spark.sql.types.DecimalType
+    // deg is consumed iters+1 times, so it is cut too
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .localCheckpoint()
     // deg rides each edge as an iteration-INVARIANT column (r19): the
@@ -1020,7 +1090,7 @@ object CorpusAnalytics {
         .agg((lit(0.15) + lit(0.85) * sum(col("c")).cast("double")).as("r"))
     }
     rank.join(deg.withColumnRenamed("src", "node"), Seq("node"))
-      .select(col("node").as("doc_id"), col("deg"), round(col("r"), 6).as("pagerank"))
+      .select(col("node").as("doc_id"), col("deg"), col("r"))
   }
 
   val docPagerankSql: String = {

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ByteType, DoubleType, IntegerType, LongType, ShortType, StructField, StructType}
 
 /** Deduplication operators for training corpora (SURVEY.md §2 B7 +
   * E1-E4): exact text dedup, MinHash+LSH and SimHash near-dup
@@ -14,6 +14,16 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * a shuffle; bucket fan-out is capped (`maxBucket`) so one degenerate
   * key can't explode a task. Verification joins shingle sets only for
   * surviving candidate pairs.
+  *
+  * Two stages keep a driver arm for small state, chosen by a code
+  * constant over the size the stage already observes: the MinHash
+  * bucket→verify stage of [[minhashNearDuplicatesWithSig]] (signature
+  * rows, their longs and the candidate pairs) and the propagation of
+  * [[connectedComponents]] (the edge count). Below the bounds one job
+  * collects the materialized state and the stage runs in plain Scala,
+  * because a few thousand rows do not pay for the shuffles, joins and
+  * planning passes of the distributed form; above them the distributed
+  * arm runs on executors, with the same output.
   */
 object Dedup {
 
@@ -148,8 +158,22 @@ object Dedup {
     * per-document columns (canonical selection needs doc lengths) ride
     * the SAME corpus projection/checkpoint instead of paying a second
     * full text scan (r20). `meta` columns are evaluated in the one
-    * shingle projection and must be aliased. With `meta = Nil` the
-    * plan is byte-identical to [[minhashNearDuplicates]]'s. */
+    * shingle projection and must be aliased.
+    *
+    * Scale shape: the signature frame is materialized once
+    * (`localCheckpoint`), and that job also observes its row count, its
+    * non-null id count and its long count (band keys plus hashed
+    * shingles). Within [[MinhashDriverRows]] rows and
+    * [[MinhashDriverLongs]] longs of integral, non-null, unique ids,
+    * the signatures are collected in one job and bucketing, pair
+    * emission and Jaccard verification run on the driver
+    * ([[minhashPairsOnDriver]], at most [[MinhashDriverPairs]]
+    * candidate pairs): a few thousand signatures do not pay for the
+    * bucket shuffle and the two verify joins. Larger inputs, and
+    * duplicate ids (whose join fan-out the driver arm does not
+    * reproduce), keep the distributed arm over the same checkpoint
+    * ([[minhashPairsDistributed]]). With `strict`, the driver arm
+    * raises at construction rather than at the first action. */
   def minhashNearDuplicatesWithSig(docs: DataFrame, idCol: String, textCol: String,
                             threshold: Double, n: Int = 3,
                             bands: Int = 32, rowsPerBand: Int = 4,
@@ -158,17 +182,102 @@ object Dedup {
     val projected = docs.select(
       Seq(col(idCol).as("id"), wordShingles(textCol, n).as("shs")) ++ meta: _*)
     val metaNames = projected.columns.drop(2).toSeq
+    val stats = Observation()
     val sh = projected
       .select(Seq(col("id"),
         graft.functions.HashExprs.minhashBandKeys(col("shs"), bands, rowsPerBand).as("bk"),
         expr("transform(shs, g -> xxhash64(g))").as("sh")) ++ metaNames.map(col): _*)
+      .observe(stats, count(lit(1)).as("rows"), count(col("id")).as("ids"),
+        coalesce(sum(size(col("bk")) + size(col("sh"))), lit(0L)).as("longs"))
       .localCheckpoint()
+    val m = stats.get
+    val idType = sh.schema("id").dataType
+    val local = idType match {
+      case ByteType | ShortType | IntegerType | LongType
+          if m("ids") == m("rows") && m("rows").asInstanceOf[Long] <= MinhashDriverRows &&
+            m("longs").asInstanceOf[Long] <= MinhashDriverLongs =>
+        val spark = sh.sparkSession
+        import spark.implicits._
+        minhashPairsOnDriver(
+          sh.select(col("id").cast("long"), col("bk"), col("sh"))
+            .as[(Long, Array[Long], Array[Long])].collect(),
+          threshold, maxBucket, strict)
+      case _ => None
+    }
+    val pairs = local.map { ps =>
+      // the distributed arm's ids come out of non-null bucket arrays
+      val schema = StructType(Seq(StructField("id_b", LongType, nullable = false),
+        StructField("id_a", LongType, nullable = false), StructField("jaccard", DoubleType)))
+      sh.sparkSession.createDataFrame(
+          java.util.Arrays.asList(ps.map { case (a, b, j) => Row(b, a, j) }: _*), schema)
+        .select(col("id_b").cast(idType).as("id_b"), col("id_a").cast(idType).as("id_a"),
+          col("jaccard"))
+    }.getOrElse(minhashPairsDistributed(sh, threshold, maxBucket, strict))
+    (pairs, sh)
+  }
+
+  /** Driver-arm bounds of [[minhashNearDuplicatesWithSig]]: signature
+    * rows, longs across their band-key and shingle arrays (32 MB), and
+    * candidate pairs before verification. */
+  private[graft] val MinhashDriverRows: Int = 1 << 20
+  private[graft] val MinhashDriverLongs: Long = 1L << 22
+  private[graft] val MinhashDriverPairs: Long = 1L << 20
+
+  /** The distributed arm of [[minhashNearDuplicatesWithSig]] over its
+    * checkpointed `(id, bk, sh)` frame: bucket shuffle, pair emission,
+    * the two verify joins and the threshold. */
+  private[graft] def minhashPairsDistributed(sh: DataFrame, threshold: Double,
+                                             maxBucket: Int, strict: Boolean): DataFrame = {
     val sig = sh.select(col("id"),
       posexplode(col("bk")).as(Seq("band", "key")))
-    val pairs = joinJaccard(pairsWithinBuckets(sig, maxBucket, strict),
+    joinJaccard(pairsWithinBuckets(sig, maxBucket, strict),
         sh.select(col("id"), col("sh")))
       .filter(col("jaccard") >= threshold)
-    (pairs, sh)
+  }
+
+  /** The driver arm of [[minhashNearDuplicatesWithSig]] over collected
+    * `(id, bk, sh)` signatures: the rows [[pairsWithinBuckets]] +
+    * [[joinJaccard]] + threshold give, as (id_a, id_b, jaccard) with
+    * id_a < id_b. Buckets are (band position, key); each bucket of two
+    * or more ids is sorted ascending, raises past `maxBucket` when
+    * `strict` (the distributed arm's message) and is otherwise cut to
+    * its first `maxBucket` ids; pairs are distinct; Jaccard is
+    * |A∩B| / |A∪B| over the distinct hashed shingles, as a double
+    * division. `None` — take the distributed arm — for duplicate ids,
+    * null arrays, an empty shingle array or more than
+    * [[MinhashDriverPairs]] candidate pairs. */
+  private[graft] def minhashPairsOnDriver(docs: Array[(Long, Array[Long], Array[Long])],
+                                          threshold: Double, maxBucket: Int,
+                                          strict: Boolean): Option[Array[(Long, Long, Double)]] = {
+    val eligible = docs.map(_._1).distinct.length == docs.length &&
+      docs.forall(d => d._2 != null && d._3 != null && d._3.nonEmpty)
+    if (!eligible) return None
+    val buckets = scala.collection.mutable.HashMap.empty[(Int, Long), List[Long]]
+    docs.foreach { case (id, bk, _) =>
+      bk.indices.foreach(i => buckets((i, bk(i))) = id :: buckets.getOrElse((i, bk(i)), Nil))
+    }
+    val lists = buckets.valuesIterator.filter(_.lengthCompare(1) > 0).map { b =>
+      val sorted = b.toArray.sorted
+      if (sorted.length <= maxBucket) sorted
+      else if (strict) throw new IllegalStateException(
+        s"minhash LSH bucket exceeds maxBucket=$maxBucket (${sorted.length} ids) — " +
+          "pairs would be silently dropped")
+      else sorted.take(maxBucket)
+    }.toArray
+    if (lists.map(l => l.length.toLong * (l.length - 1) / 2).sum > MinhashDriverPairs) return None
+    val pairs = scala.collection.mutable.HashSet.empty[(Long, Long)]
+    lists.foreach(l => for (i <- 1 until l.length; j <- 0 until i) pairs += ((l(j), l(i))))
+    val shingles = docs.map { case (id, _, sh) => id -> sh.distinct.sorted }.toMap
+    Some(pairs.iterator.map { case (a, b) =>
+      val (x, y) = (shingles(a), shingles(b))
+      var (i, j, common) = (0, 0, 0)
+      while (i < x.length && j < y.length) {
+        if (x(i) < y(j)) i += 1
+        else if (x(i) > y(j)) j += 1
+        else { common += 1; i += 1; j += 1 }
+      }
+      (a, b, common.toDouble / (x.length + y.length - common).toDouble)
+    }.filter(_._3 >= threshold).toArray)
   }
 
   /** Connected components over a near-dup pair graph (E21) — the

@@ -474,13 +474,17 @@ object Similarity {
     * same k·dim centroid values as a hashed relation; the driver still
     * never materializes them as API output. Input must carry (vec_id,
     * embCol) with non-null float embeddings; output is
-    * (vec_id, embCol, cell). */
+    * (vec_id, embCol, cell), one row per input row: duplicate `vec_id`s
+    * are not collapsed. An empty centroid frame assigns nothing and
+    * gives no row (the global aggregate's one empty-array row is
+    * filtered out before the cross join). */
   def assignCells(vecs: DataFrame, centroids: DataFrame,
                   embCol: String = "embedding"): DataFrame = {
     val centsRow = centroids.agg(
       array_sort(collect_list(struct(col("cell"),
         (VectorExprs.floatDot(col("centroid"), col("centroid")) / lit(2.0)).as("half"),
         col("centroid")))).as("__cents"))
+      .filter(size(col("__cents")) > 0)
     vecs.select(col("vec_id"), col(embCol))
       .crossJoin(broadcast(centsRow))
       .select(col("vec_id"), col(embCol),

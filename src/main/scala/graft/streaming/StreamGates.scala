@@ -180,14 +180,17 @@ object StreamGates {
     * is cheaper than the extra per-batch changelog file the feature
     * writes. Changelog checkpointing is a large-state production knob,
     * not a micro-state one — left OFF. */
-  private def withRocksDb[T](s: SparkSession)(body: => T): T = {
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(provider)
-    s.conf.set(provider,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  private def withRocksDb[T](s: SparkSession)(body: => T): T =
+    withConf(s, "spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
+
+  /** `body` with one session conf set, restored (or unset) after. */
+  private def withConf[T](s: SparkSession, key: String, value: String)(body: => T): T = {
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, value)
     try body finally prev match {
-      case Some(v) => s.conf.set(provider, v)
-      case None => s.conf.unset(provider)
+      case Some(v) => s.conf.set(key, v)
+      case None => s.conf.unset(key)
     }
   }
 
@@ -791,12 +794,18 @@ object StreamGates {
     val inC = stagedOnce(dir, "join_c")(d => stage(clicks, d, nFiles = 2))
     val inP = stagedOnce(dir, "join_p")(d => stage(purchases, d, nFiles = 2))
     val qn = uniq("sg_join")
-    drain(EventStream.attributeWithin(
-        fileStream(s, inC, clicks.schema), fileStream(s, inP, purchases.schema),
-        horizonSeconds = 1800)
-      .writeStream.format("memory").queryName(qn)
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", tempDir("graft_sg_join_ck")))
+    // no no-data micro-batch: whether the drain ended with one varied
+    // from run to run, and so did the plans it executed; an inner
+    // stream-stream join emits on match, so a batch that only evicts
+    // state changes no output row
+    withConf(s, "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
+      drain(EventStream.attributeWithin(
+          fileStream(s, inC, clicks.schema), fileStream(s, inP, purchases.schema),
+          horizonSeconds = 1800)
+        .writeStream.format("memory").queryName(qn)
+        .outputMode(OutputMode.Append)
+        .option("checkpointLocation", tempDir("graft_sg_join_ck")))
+    }
     val got = s.table(qn)
       .select(col("user_id"), col("click_ts"), col("purchase_ts"), col("purchase_value"))
     val want = EventStream.attributeWithin(clicks, purchases, horizonSeconds = 1800)

@@ -1,17 +1,20 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.classic.{Dataset => ClassicDataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.operators.{CorpusAnalytics, Dedup, Similarity}
 
-/** The three iterative corpus operators each run their rounds on the
-  * driver below a size bound and on executors above it. Both arms must
-  * give the same output: connected components, the BPE merge table and
-  * the k-means centroids (bit for bit on a one-partition input). Each
-  * arm is called directly on seeded ScalaCheck inputs and on the
+/** The iterative corpus operators each run their rounds on the driver
+  * below a size bound and on executors above it. Both arms must give
+  * the same output: connected components, the BPE merge table, the
+  * k-means centroids (bit for bit on a one-partition input), the
+  * PageRank ranks (bit for bit) and the MinHash near-duplicate pairs.
+  * Each arm is called directly on seeded ScalaCheck inputs and on the
   * hostile shapes named per test. */
 class IterativeArmsSpec extends SparkSpec {
   import spark.implicits._
@@ -186,5 +189,151 @@ class IterativeArmsSpec extends SparkSpec {
     assert(Similarity.kmeansCentroids(empty, 4, 2).count() == 0)
     assert(Similarity.kmeansDistributed(
       empty.select(col("vec_id"), col("embedding").as("__emb")), 4, 2).count() == 0)
+  }
+
+  // ----------------------------------------------------------- PageRank
+
+  private def rankBits(rs: Seq[(Long, Long, Double)]): Seq[(Long, Long, Long)] =
+    rs.map { case (n, d, r) => (n, d, java.lang.Double.doubleToLongBits(r)) }
+
+  private def rounded(ranks: DataFrame): Set[Row] =
+    ranks.select(col("doc_id"), col("deg"), round(col("r"), 6)).collect().toSet
+
+  private def pagerankBothArms(edges: Seq[(Long, Long)], iters: Int): Unit = {
+    val df = edges.toDF("src", "dst")
+    val driver = CorpusAnalytics.pagerankOnDriver(edges.toArray, iters).toSeq
+    val distributed = CorpusAnalytics.pagerankDistributed(df, iters)
+    assert(rankBits(driver) ==
+      rankBits(distributed.as[(Long, Long, Double)].collect().toSeq.sortBy(_._1)),
+      s"iters=$iters on $edges")
+    val dispatched = CorpusAnalytics.pagerank(df, iters)
+    assert(dispatched.schema == distributed.schema)
+    assert(rankBits(dispatched.as[(Long, Long, Double)].collect().toSeq) == rankBits(driver))
+    assert(rounded(dispatched) == rounded(distributed))
+  }
+
+  test("PageRank: driver rounds give bit-identical ranks on random graphs") {
+    // few ids, many edges: self-loops, duplicate and reversed edges,
+    // nodes with no in-edge (dropped after round 1) and extreme ids
+    val ids = Seq(-3L, 0L, 1L, 2L, 4L, 9L, 17L, Long.MaxValue, Long.MinValue + 1)
+    val gen = for {
+      n <- Gen.choose(1, 30)
+      es <- Gen.listOfN(n, Gen.zip(Gen.oneOf(ids), Gen.oneOf(ids)))
+      iters <- Gen.choose(1, 5)
+    } yield (es, iters)
+    samples(gen, 8).foreach { case (es, iters) => pagerankBothArms(es, iters) }
+  }
+
+  test("PageRank: empty graph, one edge, a star, repeats and extreme ids") {
+    pagerankBothArms(Nil, iters = 3)
+    assert(CorpusAnalytics.pagerank(Seq.empty[(Long, Long)].toDF("src", "dst"), 3).count() == 0)
+    pagerankBothArms(Seq((1L, 2L)), iters = 1)   // dst has no out-edge: no row
+    pagerankBothArms(Seq((1L, 2L), (2L, 1L)), iters = 5)
+    val star = (1L to 12L).flatMap(i => Seq((0L, i), (i, 0L)))
+    pagerankBothArms(star, iters = 1)
+    pagerankBothArms(star, iters = 5)
+    pagerankBothArms(Seq((3L, 4L), (3L, 4L), (4L, 3L), (4L, 5L), (5L, 3L), (3L, 5L)), iters = 5)
+    val extreme = Seq((Long.MaxValue, Long.MinValue + 1), (Long.MinValue + 1, Long.MaxValue),
+      (Long.MaxValue, 0L), (0L, Long.MaxValue))
+    pagerankBothArms(extreme, iters = 1)
+    pagerankBothArms(extreme, iters = 5)
+  }
+
+  test("PageRank: the dispatcher keeps the id type of an int edge frame") {
+    val edges = Seq((1, 2), (2, 1), (2, 3), (3, 2), (3, 1)).toDF("src", "dst")
+    val driver = CorpusAnalytics.pagerank(edges, 3)
+    val distributed = CorpusAnalytics.pagerankDistributed(edges, 3)
+    assert(driver.schema == distributed.schema)
+    assert(DfCompare.multisetEqual(driver, distributed))
+  }
+
+  test("PageRank: doc_pagerank takes the driver arm; its output schema is pinned") {
+    val out = CorpusAnalytics.docPagerank(spark, sf)
+    assert(isLocal(out))
+    assert(out.schema.map(f => (f.name, f.dataType, f.nullable)) ==
+      Seq(("doc_id", LongType, true), ("deg", LongType, false), ("pagerank", DoubleType, true)))
+  }
+
+  // ------------------------------------------------------------ MinHash
+
+  private def isLocal(df: DataFrame): Boolean =
+    df.asInstanceOf[ClassicDataset[_]].queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[LocalRelation])
+
+  private val docSchema = StructType(Seq(StructField("id", LongType), StructField("text", StringType)))
+
+  private def docFrame(docs: Seq[(Long, String)]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(docs.map { case (i, t) => Row(i, t) }: _*),
+      docSchema)
+
+  /** Dispatcher vs the distributed arm over the dispatcher's own
+    * checkpoint; `driver` says which arm the dispatcher must take. */
+  private def minhashBothArms(docs: DataFrame, threshold: Double, maxBucket: Int = 64,
+                              strict: Boolean = false, n: Int = 3, bands: Int = 8,
+                              rows: Int = 2, driver: Boolean = true): DataFrame = {
+    val (pairs, sh) = Dedup.minhashNearDuplicatesWithSig(docs, "id", "text", threshold, n,
+      bands, rows, maxBucket, strict)
+    val distributed = Dedup.minhashPairsDistributed(sh, threshold, maxBucket, strict)
+    assert(isLocal(pairs) == driver)
+    assert(pairs.schema == distributed.schema)
+    def multiset(df: DataFrame) = df.collect().groupMapReduce(identity)(_ => 1)(_ + _)
+    assert(multiset(pairs) == multiset(distributed), s"on ${docs.collect().toSeq}")
+    pairs
+  }
+
+  test("MinHash: driver bucket/verify equals the distributed pair stage on random corpora") {
+    // a five-word vocabulary and short texts: many shared buckets, exact
+    // copies, texts shorter than n, empty and null texts
+    val text = Gen.frequency(
+      10 -> Gen.choose(0, 7).flatMap(k => Gen.listOfN(k, Gen.oneOf("a", "b", "c", "d", "e")))
+        .map(_.mkString(" ")),
+      1 -> Gen.const(null: String))
+    val gen = for {
+      k <- Gen.choose(1, 16)
+      ts <- Gen.listOfN(k, text)
+      n <- Gen.choose(1, 3)
+      threshold <- Gen.oneOf(0.0, 0.25, 0.5, 0.8, 1.0)
+    } yield (ts.zipWithIndex.map { case (t, i) => (i.toLong * 7 - 20, t) }, n, threshold)
+    samples(gen, 8).foreach { case (docs, n, threshold) =>
+      minhashBothArms(docFrame(docs), threshold, n = n)
+    }
+  }
+
+  test("MinHash: one full bucket, strict over-full buckets and non-strict truncation") {
+    val same = docFrame((1L to 6L).map(i => (i * 3, "the same five word text")))
+    val all = minhashBothArms(same, threshold = 0.8)
+    assert(all.count() == 15 && all.filter(col("jaccard") =!= 1.0).isEmpty)
+    val strictDriver = intercept[IllegalStateException](
+      Dedup.minhashNearDuplicatesWithSig(same, "id", "text", 0.8, maxBucket = 4, strict = true))
+    assert(strictDriver.getMessage.contains("maxBucket=4"))
+    val (_, sh) = Dedup.minhashNearDuplicatesWithSig(same, "id", "text", 0.8)
+    val strictDistributed = intercept[Exception](
+      Dedup.minhashPairsDistributed(sh, 0.8, maxBucket = 4, strict = true).collect())
+    assert(strictDistributed.getMessage.contains("maxBucket=4"))
+    // non-strict: each bucket keeps its 4 lowest ids, C(4, 2) pairs
+    val cut = minhashBothArms(same, threshold = 0.8, maxBucket = 4)
+    assert(cut.select("id_a", "id_b").as[(Long, Long)].collect().toSet ==
+      Seq(3L, 6L, 9L, 12L).combinations(2).map(c => (c(0), c(1))).toSet)
+  }
+
+  test("MinHash: null text, short docs and the empty input") {
+    val docs = docFrame(Seq((1L, null), (2L, null), (3L, "a b"), (4L, "a b"), (5L, ""),
+      (6L, "a b c d"), (7L, "a b c e")))
+    minhashBothArms(docs, threshold = 0.0)
+    minhashBothArms(docs, threshold = 0.5, n = 5)
+    assert(minhashBothArms(docFrame(Nil), threshold = 0.5).isEmpty)
+  }
+
+  test("MinHash: duplicate ids keep the distributed arm") {
+    val docs = docFrame(Seq((1L, "a b c d"), (1L, "a b c d"), (2L, "a b c d"), (3L, "x y z")))
+    val pairs = minhashBothArms(docs, threshold = 0.5, driver = false)
+    assert(pairs.count() > 1)
+  }
+
+  test("MinHash: an int id column comes back as int from both arms") {
+    val docs = Seq((1, "a b c d"), (2, "a b c d"), (3, "a b c e"), (4, "q r s")).toDF("id", "text")
+    val pairs = minhashBothArms(docs, threshold = 0.5)
+    assert(pairs.schema("id_a").dataType == IntegerType)
+    assert(pairs.select("id_a", "id_b").as[(Int, Int)].collect().contains((1, 2)))
   }
 }

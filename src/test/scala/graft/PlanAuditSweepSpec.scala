@@ -2,7 +2,10 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset}
-import org.apache.spark.sql.execution.{CollectLimitExec, FileSourceScanExec, GlobalLimitExec, LocalLimitExec, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.{CollectLimitExec, FileSourceScanExec, GlobalLimitExec, LocalLimitExec, RDDScanExec, SortExec, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
@@ -89,6 +92,40 @@ object PlanAudit {
     }
   }
 
+  /** The plan's windows that run in one partition. */
+  def singlePartitionWindows(plan: SparkPlan): Seq[WindowExec] = {
+    val ws = scala.collection.mutable.ArrayBuffer[WindowExec]()
+    walk(plan) {
+      case w: WindowExec if singlePartitionWindow(w) => ws += w
+      case _ => ()
+    }
+    ws.toSeq
+  }
+
+  /** A window with no partition spec, or one fed by a single-partition
+    * exchange (below its sort, if any). */
+  private def singlePartitionWindow(w: WindowExec): Boolean = {
+    val feed = w.child match {
+      case s: SortExec => s.child
+      case c => c
+    }
+    w.partitionSpec.isEmpty || (feed match {
+      case e: ShuffleExchangeExec => e.outputPartitioning.numPartitions == 1
+      case _ => false
+    })
+  }
+
+  /** Does this subtree read any scanned relation (file, catalog, cached
+    * or checkpointed; a driver-local relation is bounded and is not
+    * one) with no aggregate or limit between it and the subtree root? */
+  private def unboundedScanBelow(p: SparkPlan): Boolean =
+    if (reduces(p)) false
+    else p match {
+      case _: FileSourceScanExec | _: BatchScanExec | _: RDDScanExec |
+           _: InMemoryTableScanExec => true
+      case _ => stepInto(p).exists(unboundedScanBelow)
+    }
+
   /** All scale-killer violations in a prepared physical plan.
     * `allPairsAllowed` exempts the two all-pairs arms (cartesian /
     * unbounded-NL) for queries documented as intentionally-exact
@@ -120,6 +157,11 @@ object PlanAudit {
         // aggregate/limit already reduced the stream feeding it
         if (unboundedFactBelow(e.child, filterBounds = false))
           vs += "single-partition exchange fed by an unreduced fact-table scan"
+      case w: WindowExec if singlePartitionWindow(w) =>
+        // a global window sorts its whole input in one task: only legal
+        // over a frame an aggregate or a limit already bounded
+        if (unboundedScanBelow(w.child))
+          vs += "single-partition window over an unaggregated scan"
       case b: BroadcastExchangeExec =>
         // broadcasting a fact table that was neither aggregated,
         // limited, nor explicitly filtered to a subset is a driver/

@@ -602,4 +602,54 @@ class PlanSpec extends SparkSpec {
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1, p)
     assert(!p.contains("SinglePartition"), p)
   }
+
+  test("single-partition windows sit above an aggregate or a limit, never over a raw scan") {
+    // PlanAudit's window rule, which PlanAuditSweepSpec applies to every
+    // registered path, pinned on the five known global-window sites:
+    // q_period_delta (Analytics.periodDelta: lag over the month
+    // aggregate), zipf_fit (CorpusAnalytics.zipfFit: rank over the
+    // top-k limit), volume_anomaly (DataQuality.volumeAnomaly: trailing
+    // frame over the daily aggregate), join_order_probe
+    // (DataQuality.joinOrderProbe: ranks over the six permutations
+    // crossed with aggregated selectivities) and the distributed
+    // k-means seed numbering (Similarity.kmeansDistributed: row_number
+    // over the k-row limit, run while the frame is built). Each site
+    // must plan such a window, and the rule must pass it.
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val sites = Seq("q_period_delta", "zipf_fit", "volume_anomaly", "join_order_probe")
+        .map(n => n -> PlanAudit.preparedPlan(SparkEntry.queries(n)(spark, sf)))
+      // the k-means seed window runs inside a localCheckpoint job
+      val plans = scala.collection.mutable.ArrayBuffer[SparkPlan]()
+      val cap = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          plans.synchronized(plans += qe.executedPlan)
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      org.apache.spark.sql.graftfn.PlanBridge.drainListenerBus(spark.sparkContext)
+      spark.listenerManager.register(cap)
+      try {
+        Similarity.kmeansDistributed(Tables.embeddings(spark, sf)
+          .select(col("vec_id"), col("embedding").as("__emb")), 4, 1)
+        org.apache.spark.sql.graftfn.PlanBridge.drainListenerBus(spark.sparkContext)
+      } finally spark.listenerManager.unregister(cap)
+      val kmeans = plans.synchronized(plans.toSeq)
+        .filter(p => PlanAudit.singlePartitionWindows(p).nonEmpty)
+      assert(kmeans.nonEmpty, "no single-partition window in the k-means seed job")
+      (sites ++ kmeans.map("kmeans_seed" -> _)).foreach { case (name, p) =>
+        assert(PlanAudit.singlePartitionWindows(p).nonEmpty, s"$name: no global window\n$p")
+        assert(PlanAudit.violations(p, allPairsAllowed = false).isEmpty, s"$name\n$p")
+      }
+      // the rule fires on a global window straight over a scan, also of
+      // a table the fact-table funnel rule does not watch
+      import org.apache.spark.sql.expressions.Window
+      val raw = Tables.customer(spark, sf)
+        .withColumn("rk", row_number().over(Window.orderBy(col("c_custkey"))))
+      assert(PlanAudit.violations(PlanAudit.preparedPlan(raw), allPairsAllowed = false)
+        .exists(_.contains("single-partition window")))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
 }

@@ -233,6 +233,23 @@ class SimilaritySpec extends SparkSpec {
     assert(got == Map(10L -> 0L, 11L -> 1L, 12L -> 2L, 13L -> 0L, 14L -> 2L, 15L -> 0L, 16L -> 0L))
   }
 
+  test("assignCells: an empty centroid frame assigns no row") {
+    val cents = Seq.empty[(Long, Array[Float])].toDF("cell", "centroid")
+    val vs = Seq((1L, Array(1f, 0f)), (2L, Array(0f, 1f))).toDF("vec_id", "embedding")
+    val out = Similarity.assignCells(vs, cents)
+    assert(out.columns.toSeq == Seq("vec_id", "embedding", "cell"))
+    assert(out.count() == 0)
+  }
+
+  test("assignCells: duplicate vec_ids are not collapsed") {
+    val cents = Seq((0L, Array(1f, 0f)), (1L, Array(0f, 1f))).toDF("cell", "centroid")
+    val vs = Seq((1L, Array(1f, 0f)), (1L, Array(1f, 0f)), (1L, Array(0f, 2f)), (2L, Array(0f, 1f)))
+      .toDF("vec_id", "embedding")
+    val got = Similarity.assignCells(vs, cents).select("vec_id", "cell").as[(Long, Long)]
+      .collect().toSeq.sorted
+    assert(got == Seq((1L, 0L), (1L, 0L), (1L, 1L), (2L, 1L)))
+  }
+
   test("kmeans trains on a bounded hash-sample when the corpus exceeds maxTrain") {
     import spark.implicits._
     val dim = 4
