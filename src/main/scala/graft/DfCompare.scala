@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** One-job multiset comparison for gate assertions (r20).
@@ -18,11 +18,9 @@ import org.apache.spark.sql.functions._
   * comparison itself, and the null/NaN/-0.0 key semantics match
   * exceptAll (both group null-safely with normalized floats).
   *
-  * [[multisetEqualCounts]] additionally returns each side's row count,
-  * collected as observe metrics on the SAME job — gates that previously
-  * ran a separate `.count()` action per side fold those in for free.
-  * The mismatch check runs a full `count()` (never `isEmpty`) so the
-  * observed metrics are never truncated by an early-exit take(1). */
+  * [[multisetEqualCounts]] additionally returns each side's row count
+  * from the SAME aggregate as the mismatch count — gates that previously
+  * ran a separate `.count()` action per side fold those in for free. */
 object DfCompare {
 
   /** Multiset equality of two same-schema frames in one job. */
@@ -31,22 +29,11 @@ object DfCompare {
 
   /** (equal, |a| rows, |b| rows) — one job, each input evaluated once. */
   def multisetEqualCounts(a: DataFrame, b: DataFrame): (Boolean, Long, Long) = {
-    require(a.columns.length == b.columns.length,
-      s"multisetEqual: column arity differs (${a.columns.length} vs ${b.columns.length})")
-    val keys = a.columns.toSeq
-    val obs = Observation()
-    val tagged = a.select(keys.map(col) :+ lit(1L).as("__side"): _*)
-      .unionAll(b.select(b.columns.toSeq.map(col) :+ lit(-1L).as("__side"): _*))
-      .observe(obs,
-        count(when(col("__side") === 1L, lit(1))).as("__na"),
-        count(when(col("__side") === -1L, lit(1))).as("__nb"))
-    val mismatches = tagged
-      .groupBy(keys.map(col): _*)
-      .agg(sum(col("__side")).as("__d"))
-      .filter(col("__d") =!= 0L)
-      .count()
-    val m = obs.get
-    (mismatches == 0L, m("__na").asInstanceOf[Long], m("__nb").asInstanceOf[Long])
+    val r = taggedGroups(a, b)
+      .agg(count(when(col("__na") =!= col("__nb"), lit(1))),
+        coalesce(sum(col("__na")), lit(0L)), coalesce(sum(col("__nb")), lit(0L)))
+      .head()
+    (r.getLong(0) == 0L, r.getLong(1), r.getLong(2))
   }
 
   private def taggedGroups(a: DataFrame, b: DataFrame): DataFrame = {

@@ -245,14 +245,10 @@ object Analytics {
     * that explicit list, keeping the main job a single shuffle. This
     * is the production two-pass shape; D15 is the known-values form. */
   def dynamicPivot(s: SparkSession, dir: String, maxValues: Int = 100): DataFrame = {
-    // strict upper bound so maxValues + 1 can't overflow to a negative limit
-    require(maxValues > 0 && maxValues < Int.MaxValue,
-      s"maxValues must be in (0, Int.MaxValue): $maxValues")
-    val spine = Tables.events(s, dir)
-      .select(col("event_type")).distinct()
-      .limit(maxValues + 1).collect().map(_.getString(0)).sorted
-    require(spine.length <= maxValues,
-      s"pivot spine exceeds $maxValues distinct values — pivot is the wrong shape")
+    val spine = Bounded.collect(Tables.events(s, dir).select(col("event_type")).distinct(), maxValues)
+      .getOrElse(throw new IllegalArgumentException(
+        s"pivot spine exceeds $maxValues distinct values — pivot is the wrong shape"))
+      .map(_.getString(0)).sorted
     Tables.events(s, dir)
       .groupBy(col("user_id")).pivot("event_type", spine)
       .agg(count(lit(1)))

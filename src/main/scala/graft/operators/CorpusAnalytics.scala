@@ -378,11 +378,10 @@ object CorpusAnalytics {
                        maxSources: Int = 10000): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("source"))
-    val srcRows = docs.select(col("source")).distinct()
-      .limit(maxSources + 1).collect()
-    require(srcRows.length <= maxSources,
-      s"more than maxSources=$maxSources sources — assign indices via " +
-        "globalRank over the distinct frame instead of the driver map")
+    val srcRows = Bounded.collect(docs.select(col("source")).distinct(), maxSources)
+      .getOrElse(throw new IllegalArgumentException(
+        s"more than maxSources=$maxSources sources — assign indices via " +
+          "globalRank over the distinct frame instead of the driver map"))
     val idx = srcRows.map(_.getString(0)).sorted.zipWithIndex
     val nSources = idx.length.toLong
     val ranked = Relational.globalRank(docs,
@@ -970,14 +969,14 @@ object CorpusAnalytics {
     * per-node sum (the D44 discipline), so every iteration is
     * bit-identical across engines, partitionings and both arms below.
     *
-    * Scale shape: the edge build (gram explode, rare filter, self-join)
-    * is materialized once (`localCheckpoint`). When it holds at most
-    * [[PagerankDriverEdges]] edges of integral, non-null ids, the edges
-    * are collected in one job and the `iters` rounds run on the driver
-    * ([[pagerankOnDriver]]): a rare-gram graph is small next to its
-    * corpus, and each distributed round costs a join, a partial
-    * aggregate and a planning pass. Larger or other graphs keep the
-    * classic distributed PageRank ([[pagerankDistributed]]). */
+    * Scale shape: one bounded collect ([[Bounded.collect]]) reads the
+    * edge build (gram explode, rare filter, self-join). When it holds at
+    * most [[PagerankDriverEdges]] edges of integral, non-null ids, the
+    * `iters` rounds run on the driver ([[pagerankOnDriver]]): a
+    * rare-gram graph is small next to its corpus, and each distributed
+    * round costs a join, a partial aggregate and a planning pass. Larger
+    * or other graphs keep the classic distributed PageRank
+    * ([[pagerankDistributed]]), which materializes the edges first. */
   def docPagerank(s: SparkSession, dir: String, iters: Int = 3): DataFrame = {
     // 128-bit gram identities from the shared [[GramTable]] pass
     // (per-doc distinct by construction, ≥5-token docs only — the
@@ -992,16 +991,11 @@ object CorpusAnalytics {
       .filter(col("df") >= 2 && col("df") <= 10)
     val member = grams.join(rare, Seq("h1", "h2"))
       .select(col("h1"), col("h2"), col("doc_id"))
-    // localCheckpoint: the gram-explode + rare-filter + self-join
-    // pipeline above feeds the collect or, past the bound, deg AND
-    // every unrolled iteration (iters+2 consumers) — without the cut
-    // each consumer recomputes the whole edge build
     val edges = member.select(col("h1"), col("h2"), col("doc_id").as("a"))
       .join(member.select(col("h1"), col("h2"), col("doc_id").as("b")), Seq("h1", "h2"))
       .filter(col("a") =!= col("b"))
       .select(col("a").as("src"), col("b").as("dst"))
       .distinct()
-      .localCheckpoint()
     pagerank(edges, iters)
       .select(col("doc_id"), col("deg"), round(col("r"), 6).as("pagerank"))
   }
@@ -1010,20 +1004,15 @@ object CorpusAnalytics {
     * pairs). */
   private[graft] val PagerankDriverEdges: Int = 1 << 20
 
-  /** Unrounded PageRank `(doc_id, deg, r)` over a materialized
-    * `(src, dst)` edge frame: on the driver within
-    * [[PagerankDriverEdges]] integral, non-null edges, else distributed.
-    * Both arms return the same columns, types and nullability. */
+  /** Unrounded PageRank `(doc_id, deg, r)` over a `(src, dst)` edge
+    * frame: on the driver within [[PagerankDriverEdges]] integral,
+    * non-null edges, else distributed. Both arms return the same
+    * columns, types and nullability. */
   private[graft] def pagerank(edges: DataFrame, iters: Int): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val e = edges.select(col("src"), col("dst"))
-    val integral = e.schema.forall(f => Seq(ByteType, ShortType, IntegerType, LongType)
-      .contains(f.dataType))
-    val collected = if (!integral) None
-      else Some(e.limit(PagerankDriverEdges + 1).collect())
-        .filter(rs => rs.length <= PagerankDriverEdges && !rs.exists(_.anyNull))
-    collected.map { rs =>
+    Bounded.collect(e, PagerankDriverEdges, "src", "dst").filter(!_.exists(_.anyNull)).map { rs =>
       val ranks = pagerankOnDriver(
         rs.map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)), iters)
       // the distributed arm's doc_id is its dst column
@@ -1064,12 +1053,14 @@ object CorpusAnalytics {
     rank.keys.filter(deg.contains).toArray.sorted.map(n => (n, deg(n), rank(n)))
   }
 
-  /** The distributed arm of [[pagerank]]: each iteration is one join of
-    * the rank vector against the edge list keyed by node plus one
-    * partial-aggregated groupBy, unrolled; the edge list shuffles once
-    * and is reused. */
-  private[graft] def pagerankDistributed(edges: DataFrame, iters: Int): DataFrame = {
+  /** The distributed arm of [[pagerank]]: the edge list is materialized
+    * once (`localCheckpoint`: deg and the degree join read it), then
+    * each iteration is one join of the rank vector against the edge list
+    * keyed by node plus one partial-aggregated groupBy, unrolled; the
+    * edge list shuffles once and is reused. */
+  private[graft] def pagerankDistributed(edges0: DataFrame, iters: Int): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
+    val edges = edges0.localCheckpoint()
     // deg is consumed iters+1 times, so it is cut too
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .localCheckpoint()
@@ -1812,17 +1803,17 @@ object CorpusAnalytics {
     * learned pairs, and Scala's string order is Spark's.
     *
     * Scale shape: the corpus collapses ONCE into the word-frequency
-    * vocab (hash agg, map-side partials — the only corpus-sized pass),
-    * which is materialized (`localCheckpoint`). The k merge steps then
-    * touch the vocab only. Up to [[BpeDriverWords]] words it is
-    * collected in one job and the steps run in plain Scala
-    * ([[bpeMergesOnDriver]]): a distributed step costs two jobs and two
-    * planning passes, far more than counting pairs over a few hundred
-    * thousand words. Past the bound the steps stay on executors
-    * ([[bpeMergesDistributed]]). */
+    * vocab (hash agg, map-side partials — the only corpus-sized pass).
+    * The k merge steps then touch the vocab only. One bounded collect
+    * ([[Bounded.collect]]) reads it: up to [[BpeDriverWords]] words the
+    * steps run in plain Scala ([[bpeMergesOnDriver]]), since a
+    * distributed step costs two jobs and two planning passes, far more
+    * than counting pairs over a few hundred thousand words. Past the
+    * bound the steps stay on executors ([[bpeMergesDistributed]]), which
+    * materializes the vocab first. */
   def bpeLearn(s: SparkSession, dir: String, steps: Int = 8): DataFrame = {
     import s.implicits._
-    val vocab = bpeVocab(s, dir).localCheckpoint()
+    val vocab = bpeVocab(s, dir)
     val merges = collectVocab(vocab).map(bpeMergesOnDriver(_, steps))
       .getOrElse(bpeMergesDistributed(vocab, steps))
     merges.toDF("step", "merge_left", "merge_right", "pair_count")
@@ -1834,8 +1825,7 @@ object CorpusAnalytics {
   /** `vocab`'s (syms, freq) rows when it holds at most
     * [[BpeDriverWords]] words, from one job. */
   private def collectVocab(vocab: DataFrame): Option[Seq[(Seq[String], Long)]] =
-    Some(vocab.limit(BpeDriverWords + 1).collect()).filter(_.length <= BpeDriverWords)
-      .map(_.toSeq.map(r => (r.getSeq[String](0), r.getLong(1))))
+    Bounded.collect(vocab, BpeDriverWords).map(_.toSeq.map(r => (r.getSeq[String](0), r.getLong(1))))
 
   /** The driver arm of [[bpeLearn]]: up to `steps` merges
     * (step, left, right, count) over a collected `(syms, freq)` vocab. */
@@ -1867,7 +1857,9 @@ object CorpusAnalytics {
   }
 
   /** The distributed arm of [[bpeLearn]] over a `(syms, freq)` vocab
-    * frame: per step one partial-aggregated pair count (the exchange
+    * frame, materialized on entry (`localCheckpoint`: the first step's
+    * count and merge both read it): per step one partial-aggregated pair
+    * count (the exchange
     * carries symbol pairs, ≤ vocab·avg_word_len rows), ONE driver row
     * for the argmax (bounded `limit(1)` collect), and a codegen
     * `aggregate()` fold that applies the merge per word — no UDFs, no
@@ -1889,7 +1881,7 @@ object CorpusAnalytics {
          |                      'carry', x) END,
          |  acc -> CASE WHEN acc.carry IS NULL THEN acc.out
          |              ELSE array_append(acc.out, acc.carry) END)""".stripMargin
-    var vocab = vocab0
+    var vocab = vocab0.localCheckpoint()
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var step = 1
     var exhausted = false
@@ -1941,6 +1933,7 @@ object CorpusAnalytics {
     * [[BpeDriverWords]] words, where the driver arm has no answer). */
   def bpeLearnGate(s: SparkSession, dir: String, steps: Int = 8): DataFrame = {
     import s.implicits._
+    // both arms read the vocab, so it is materialized once here
     val vocab = bpeVocab(s, dir).localCheckpoint()
     val learned = bpeMergesDistributed(vocab, steps)
     val replayed = bpeMergesOnDriver(collectVocab(vocab).getOrElse(

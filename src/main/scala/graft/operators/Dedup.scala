@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DoubleType, IntegerType, LongType, ShortType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Deduplication operators for training corpora (SURVEY.md §2 B7 +
   * E1-E4): exact text dedup, MinHash+LSH and SimHash near-dup
@@ -20,10 +20,12 @@ import org.apache.spark.sql.types.{ByteType, DoubleType, IntegerType, LongType, 
   * bucket→verify stage of [[minhashNearDuplicatesWithSig]] (signature
   * rows, their longs and the candidate pairs) and the propagation of
   * [[connectedComponents]] (the edge count). Below the bounds one job
-  * collects the materialized state and the stage runs in plain Scala,
-  * because a few thousand rows do not pay for the shuffles, joins and
-  * planning passes of the distributed form; above them the distributed
-  * arm runs on executors, with the same output.
+  * collects the state and the stage runs in plain Scala, because a few
+  * thousand rows do not pay for the shuffles, joins and planning passes
+  * of the distributed form; above them the distributed arm runs on
+  * executors, with the same output. MinHash checkpoints its signatures
+  * before the choice (both arms and the callers read them); components
+  * checkpoint the pair list only in the distributed arm.
   */
 object Dedup {
 
@@ -161,9 +163,10 @@ object Dedup {
     * shingle projection and must be aliased.
     *
     * Scale shape: the signature frame is materialized once
-    * (`localCheckpoint`), and that job also observes its row count, its
-    * non-null id count and its long count (band keys plus hashed
-    * shingles). Within [[MinhashDriverRows]] rows and
+    * (`localCheckpoint`, before the choice: both arms and the callers
+    * read it), and that job also observes its row count, its non-null
+    * id count and its long count (band keys plus hashed shingles).
+    * Within [[MinhashDriverRows]] rows and
     * [[MinhashDriverLongs]] longs of integral, non-null, unique ids,
     * the signatures are collected in one job and bucketing, pair
     * emission and Jaccard verification run on the driver
@@ -192,18 +195,18 @@ object Dedup {
       .localCheckpoint()
     val m = stats.get
     val idType = sh.schema("id").dataType
-    val local = idType match {
-      case ByteType | ShortType | IntegerType | LongType
-          if m("ids") == m("rows") && m("rows").asInstanceOf[Long] <= MinhashDriverRows &&
-            m("longs").asInstanceOf[Long] <= MinhashDriverLongs =>
+    // the observed counts bound this collect, so it needs no limit probe
+    val local =
+      if (Bounded.integral(idType) && m("ids") == m("rows") &&
+          m("rows").asInstanceOf[Long] <= MinhashDriverRows &&
+          m("longs").asInstanceOf[Long] <= MinhashDriverLongs) {
         val spark = sh.sparkSession
         import spark.implicits._
         minhashPairsOnDriver(
           sh.select(col("id").cast("long"), col("bk"), col("sh"))
             .as[(Long, Array[Long], Array[Long])].collect(),
           threshold, maxBucket, strict)
-      case _ => None
-    }
+      } else None
     val pairs = local.map { ps =>
       // the distributed arm's ids come out of non-null bucket arrays
       val schema = StructType(Seq(StructField("id_b", LongType, nullable = false),
@@ -288,31 +291,24 @@ object Dedup {
     * Output: (id, component) for every id in `pairs`, component = min
     * id in the connected component.
     *
-    * Scale shape: the pair list is materialized once (`localCheckpoint`:
-    * the symmetric edge union would otherwise evaluate the pair
-    * pipeline once per branch). When it holds at most
-    * [[ComponentsDriverEdges]] edges of integral, non-null ids, it is
-    * collected in one job and the components come from union-find on
-    * the driver ([[componentsOnDriver]]): near-dup graphs after
-    * verification are small, and each propagation round would cost two
-    * shuffles, a checkpoint job and a planning pass. Larger or other
-    * graphs keep the min-label propagation on executors
-    * ([[componentsDistributed]]), which throws if `maxIter` rounds do
-    * not converge. */
+    * Scale shape: one bounded collect ([[Bounded.collect]]) reads the
+    * pair list. When it holds at most [[ComponentsDriverEdges]] edges of
+    * integral, non-null ids, the components come from union-find on the
+    * driver ([[componentsOnDriver]]): near-dup graphs after verification
+    * are small, and each propagation round would cost two shuffles, a
+    * checkpoint job and a planning pass. A pair list the driver already
+    * holds (the MinHash driver arm's) is read with no job. Larger or
+    * other graphs keep the min-label propagation on executors
+    * ([[componentsDistributed]]), which materializes the pair list first
+    * and throws if `maxIter` rounds do not converge. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     require(maxIter >= 2,
       "connectedComponents: the fused init round cannot observe its own " +
         "convergence; maxIter must be >= 2")
-    val p = pairs.select(col("id_a"), col("id_b")).localCheckpoint()
-    // the type of the distributed arm's ids: both columns, widened
-    val idType = p.select(col("id_a")).union(p.select(col("id_b"))).schema.head.dataType
-    val edges = idType match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        Some(p.limit(ComponentsDriverEdges + 1).collect())
-          .filter(e => e.length <= ComponentsDriverEdges && !e.exists(_.anyNull))
-      case _ => None
-    }
-    edges.map { e =>
+    val p = pairs.select(col("id_a"), col("id_b"))
+    Bounded.collect(p, ComponentsDriverEdges, "id_a", "id_b").filter(!_.exists(_.anyNull)).map { e =>
+      // the type of the distributed arm's ids: both integral columns, widened
+      val idType = p.schema.map(_.dataType).maxBy(_.defaultSize)
       val spark = p.sparkSession
       import spark.implicits._
       componentsOnDriver(e.map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)))
@@ -348,8 +344,10 @@ object Dedup {
     parent.keys.toArray.sorted.map(id => (id, find(id)))
   }
 
-  /** The distributed arm of [[connectedComponents]] over a materialized
-    * pair frame: iterative min-label propagation. Each round every node
+  /** The distributed arm of [[connectedComponents]]: the pair frame is
+    * materialized once (`localCheckpoint`: both branches of the
+    * symmetric edge union read it, in every round), then iterative min-label propagation. Each
+    * round every node
     * adopts the smallest label among itself and its neighbors, so
     * labels converge in O(component diameter) rounds — near-dup
     * components are shallow (a hub document and its variants), so
@@ -368,7 +366,8 @@ object Dedup {
     * appear twice in the fused plan (neighbor-min side + node side),
     * and the duplicated subtree's extra stages cost more than the one
     * removed job-floor. The one-round-per-job shape stays. */
-  private[graft] def componentsDistributed(p: DataFrame, maxIter: Int): DataFrame = {
+  private[graft] def componentsDistributed(pairs: DataFrame, maxIter: Int): DataFrame = {
+    val p = pairs.localCheckpoint()
     val edges = p.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(p.select(col("id_b").as("src"), col("id_a").as("dst")))
     // fused round 1 (r19): with identity labels, the first round's

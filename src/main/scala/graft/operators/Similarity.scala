@@ -310,13 +310,14 @@ object Similarity {
     *
     * Scale shape: two arms, the same centroids. When the training set
     * holds at most [[KmeansDriverFloats]] floats and a round at most
-    * [[KmeansDriverMultiplyAdds]] multiply-adds, it is collected in one
-    * job ([[kmeansOnDriver]]) and every round runs in plain Scala:
-    * at that size a distributed round is mostly its jobs and planning
-    * passes (seeds, assignment, means, checkpoint), not its arithmetic.
-    * Past either bound the rounds stay on executors
-    * ([[kmeansDistributed]]), so k·dim can grow with the corpus and the
-    * driver never holds the training set. */
+    * [[KmeansDriverMultiplyAdds]] multiply-adds, one bounded collect
+    * ([[trainingRows]]) reads it and every round runs in plain Scala
+    * ([[kmeansOnDriver]]): at that size a distributed round is mostly
+    * its jobs and planning passes (seeds, assignment, means,
+    * checkpoint), not its arithmetic. Past either bound the rounds stay
+    * on executors ([[kmeansDistributed]], the only arm that
+    * checkpoints), so k·dim can grow with the corpus and the driver
+    * never holds the training set. */
   def kmeansCentroids(vecs: DataFrame, k: Int, iters: Int = 3,
                       embCol: String = "embedding",
                       maxTrain: Long = 100000L, n: Long = -1L,
@@ -331,19 +332,12 @@ object Similarity {
         val num = math.min(den, den * cap / total + 1)
         all.filter(pmod(xxhash64(col("vec_id")), lit(den)) < lit(num))
       }
-    val integralId = base.schema("vec_id").dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
     val d = math.max(1, dim.orElse(embeddingDim(base, "__emb")).getOrElse(1))
     val rowCap = math.min(KmeansDriverFloats / d,
       KmeansDriverMultiplyAdds / (d.toLong * math.max(k, 1)))
-    val rows =
-      if (!integralId || rowCap < 1) None
-      else Some(trainingRows(base, (rowCap + 1).toInt))
-    rows.filter(r => r.length <= rowCap &&
-        r.iterator.map(x => if (x.isNullAt(2)) 0L else x.getSeq[Any](2).length.toLong).sum <=
-          KmeansDriverFloats)
+    trainingRows(base, rowCap.toInt)
+      .filter(_.iterator.map(x => if (x.isNullAt(2)) 0L else x.getSeq[Any](2).length.toLong).sum <=
+        KmeansDriverFloats)
       .map(kmeansOnDriver(vecs.sparkSession, _, k, iters))
       .getOrElse(kmeansDistributed(base, k, iters))
   }
@@ -365,12 +359,11 @@ object Similarity {
     if (xs.contains(null)) new GenericArrayData(xs.toArray[Any])
     else UnsafeArrayData.fromPrimitiveArray(xs.map(_.floatValue).toArray)
 
-  /** At most `limit` rows of a `(vec_id, __emb)` training set with an
-    * integral `vec_id`, as the driver arm reads them: `(vec_id: long,
-    * xxhash64(vec_id), __emb)` in scan order. */
-  private[graft] def trainingRows(base: DataFrame, limit: Int): Array[Row] =
-    base.select(col("vec_id").cast("long"), xxhash64(col("vec_id")), col("__emb"))
-      .limit(limit).collect()
+  /** A `(vec_id, __emb)` training set as the driver arm reads it,
+    * `(vec_id, xxhash64(vec_id), __emb)` in scan order, when it holds at
+    * most `cap` rows and `vec_id` is integral ([[Bounded.collect]]). */
+  private[graft] def trainingRows(base: DataFrame, cap: Int): Option[Array[Row]] =
+    Bounded.collect(base.select(col("vec_id"), xxhash64(col("vec_id")), col("__emb")), cap, "vec_id")
 
   /** The driver arm of [[kmeansCentroids]] over its collected training
     * set ([[trainingRows]]): the same seeds (the k smallest (hash,
@@ -381,7 +374,7 @@ object Similarity {
     * dimension's mean. Returns a local frame. */
   private[graft] def kmeansOnDriver(spark: SparkSession, rows: Array[Row],
                                     k: Int, iters: Int): DataFrame = {
-    val vecs = rows.map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)), r.getLong(1),
+    val vecs = rows.map(r => (Option(r.getAs[Number](0)).map(_.longValue), r.getLong(1),
       if (r.isNullAt(2)) null else arrayData(r.getSeq[java.lang.Float](2))))
     val seedOrder = Ordering.Tuple2(Ordering.Long, Ordering.Option(Ordering.Long))
     val seeds = vecs.sortBy(v => (v._2, v._1))(seedOrder).take(k)

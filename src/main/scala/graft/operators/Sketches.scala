@@ -74,11 +74,11 @@ object Sketches {
       count(lit(1)).as("n_total")).head()
     val sketch = CountMinSketch.readFrom(skRow.getAs[Array[Byte]]("sk"))
     val nTotal = skRow.getAs[Long]("n_total")
-    val exact = ev.groupBy(col("event_type")).agg(count(lit(1)).as("n_exact"))
-      .limit(maxKeys + 1).collect()
-    require(exact.length <= maxKeys,
-      s"more than maxKeys=$maxKeys distinct event types — a CMS probe list " +
-        "must be driver-sized; use the exact groupBy for unbounded key sets")
+    val exact = Bounded.collect(
+      ev.groupBy(col("event_type")).agg(count(lit(1)).as("n_exact")), maxKeys)
+      .getOrElse(throw new IllegalArgumentException(
+        s"more than maxKeys=$maxKeys distinct event types — a CMS probe list " +
+          "must be driver-sized; use the exact groupBy for unbounded key sets"))
     val slack = math.ceil(eps * nTotal).toLong
     val rows = exact.toSeq.map { r =>
       val key = r.getAs[String]("event_type")
@@ -138,12 +138,11 @@ object Sketches {
     // far inside `tol`) — Theta updates take scalars, not structs
     val shard = audience.groupBy(col("event_type"), col("day"))
       .agg(thetaSketch(xxhash64(col("user_id"), col("day")), lgK).as("sk"))
-    val perType = shard.groupBy(col("event_type"))
-      .agg(thetaUnion(col("sk"), lgK).as("sk"))
-      .limit(maxTypes + 1).collect()
-    require(perType.length <= maxTypes,
-      s"more than maxTypes=$maxTypes event types — an overlap matrix is " +
-        "quadratic in the type count; aggregate types first or raise the cap")
+    val perType = Bounded.collect(
+      shard.groupBy(col("event_type")).agg(thetaUnion(col("sk"), lgK).as("sk")), maxTypes)
+      .getOrElse(throw new IllegalArgumentException(
+        s"more than maxTypes=$maxTypes event types — an overlap matrix is " +
+          "quadratic in the type count; aggregate types first or raise the cap"))
     val sketches = perType.map(r => r.getAs[String]("event_type") ->
       Th.wrapSketch(Memory.wrap(r.getAs[Array[Byte]]("sk")))).sortBy(_._1)
     val ests = for {
@@ -205,11 +204,10 @@ object Sketches {
     val ev = Tables.events(s, dir)
     val shard = ev.groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(kllSketch(col("value"), k).as("sk"))
-    val merged = shard.groupBy(col("event_type"))
-      .agg(kllMerge(col("sk"), k).as("sk"))
-      .limit(maxTypes + 1).collect()
-    require(merged.length <= maxTypes,
-      s"more than maxTypes=$maxTypes event types in the KLL rollup probe")
+    val merged = Bounded.collect(
+      shard.groupBy(col("event_type")).agg(kllMerge(col("sk"), k).as("sk")), maxTypes)
+      .getOrElse(throw new IllegalArgumentException(
+        s"more than maxTypes=$maxTypes event types in the KLL rollup probe"))
     val eps = org.apache.datasketches.kll.KllSketch.getNormalizedRankError(k, false)
     val probes = merged.map { r =>
       val sk = KllDoublesSketch.heapify(Memory.wrap(r.getAs[Array[Byte]]("sk")))

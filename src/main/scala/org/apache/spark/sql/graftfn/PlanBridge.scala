@@ -1,8 +1,11 @@
 package org.apache.spark.sql.graftfn
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.{CollectLimitExec, SQLExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Bridge from raw Catalyst [[LogicalPlan]]s to user-facing
   * DataFrames. `Dataset.ofRows` and the analyzed plan accessor are
@@ -17,27 +20,6 @@ object PlanBridge {
   def analyzed(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
 
-  /** InternalRow-level mapPartitions: run `f` directly over the
-    * plan's Tungsten rows and re-wrap the result as a DataFrame with
-    * `outSchema` — NO external-Row round-trip (the
-    * `Dataset.mapPartitions` + `Encoders.row` form deserializes and
-    * re-serializes every field of every row; for a pass that only
-    * APPENDS a value, that cost dominates). Partitioning is preserved.
-    *
-    * Contract is the standard operator contract: rows handed to `f`
-    * may be backed by reused buffers — copy anything retained across
-    * `next()` calls — and rows emitted by `f` may themselves reuse
-    * buffers (consumers materialize at buffering boundaries). */
-  def internalMapPartitions(df: DataFrame,
-      outSchema: org.apache.spark.sql.types.StructType)(
-      f: Iterator[org.apache.spark.sql.catalyst.InternalRow] =>
-         Iterator[org.apache.spark.sql.catalyst.InternalRow]): DataFrame = {
-    val ds = df.asInstanceOf[classic.Dataset[_]]
-    val rdd = ds.queryExecution.toRdd
-      .mapPartitions(f, preservesPartitioning = true)
-    ds.sparkSession.internalCreateDataFrame(rdd, outSchema)
-  }
-
   /** A leaf [[org.apache.spark.sql.execution.SparkPlan]] over an
     * already-obtained InternalRow RDD (`RDDScanExec` is
     * `private[sql]`). Lets a custom physical operator that consumes
@@ -51,6 +33,23 @@ object PlanBridge {
               partitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning)
       : org.apache.spark.sql.execution.SparkPlan =
     org.apache.spark.sql.execution.RDDScanExec(output, rdd, name, partitioning)
+
+  /** `df.collect()` in no more jobs than a collect of its input when its
+    * plan ends in a row limit: a `CollectLimitExec`, also as AQE's final
+    * plan, runs its single-partition `execute()` (one job) instead of
+    * `executeCollect`, which starts another job whenever the partitions
+    * scanned so far hold too few rows. Other plans collect as usual.
+    * Query execution listeners see the action as a `collect`. */
+  def collectLimited(df: DataFrame): Array[Row] = {
+    val qe = df.asInstanceOf[classic.Dataset[_]].queryExecution
+    val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+    SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.executedPlan match {
+        case p @ (_: CollectLimitExec | _: AdaptiveSparkPlanExec) => p.execute().map(_.copy()).collect()
+        case p => p.executeCollect()
+      }
+    }.map(toRow(_).asInstanceOf[Row])
+  }
 
   /** Block until every event posted so far has reached every listener
     * (`listenerBus` is `private[spark]`). Listener events, query

@@ -66,6 +66,20 @@ class IterativeArmsSpec extends SparkSpec {
     assert(out.count() == 0 && out.columns.toSeq == Seq("id", "component"))
   }
 
+  test("connected components: the MinHash driver arm's local pair frame starts no job") {
+    // documents plus exact copies: every document pairs with its copy
+    val d = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+    val docs = d.union(d.select(col("doc_id") + 10000, col("text")))
+    val pairs = Dedup.minhashNearDuplicates(docs, "doc_id", "text", threshold = 0.8,
+        maxBucket = 4096, strict = true)
+      .select(col("id_a"), col("id_b"))
+    assert(isLocal(pairs) && !pairs.isEmpty)
+    val (components, jobs) = countJobs(Dedup.connectedComponents(pairs))
+    assert(jobs == 0, s"$jobs job(s)")
+    assert(isLocal(components))
+    assert(DfCompare.multisetEqual(components, Dedup.componentsDistributed(pairs, 20)))
+  }
+
   test("connected components: the dispatcher keeps the id type of its input") {
     val pairs = Seq((1, 2), (2, 3), (7, 7)).toDF("id_a", "id_b")
     val driver = Dedup.connectedComponents(pairs)
@@ -142,7 +156,7 @@ class IterativeArmsSpec extends SparkSpec {
     val base = df.select(col("vec_id"), col("embedding").as("__emb"))
     val distributed = bits(Similarity.kmeansDistributed(base, k, iters))
     val driver = bits(Similarity.kmeansOnDriver(spark,
-      Similarity.trainingRows(base, Int.MaxValue), k, iters))
+      Similarity.trainingRows(base, 1 << 20).get, k, iters))
     assert(driver == distributed, s"k=$k iters=$iters on $vs")
     assert(bits(Similarity.kmeansCentroids(df, k, iters)) == distributed)
   }
@@ -276,8 +290,7 @@ class IterativeArmsSpec extends SparkSpec {
     val distributed = Dedup.minhashPairsDistributed(sh, threshold, maxBucket, strict)
     assert(isLocal(pairs) == driver)
     assert(pairs.schema == distributed.schema)
-    def multiset(df: DataFrame) = df.collect().groupMapReduce(identity)(_ => 1)(_ + _)
-    assert(multiset(pairs) == multiset(distributed), s"on ${docs.collect().toSeq}")
+    assert(DfCompare.multisetEqual(pairs, distributed), s"on ${docs.collect().toSeq}")
     pairs
   }
 

@@ -51,41 +51,19 @@ class MainSpec extends SparkSpec {
   }
 
   test("a CLI day starts at most 3 Spark jobs; its audit append starts none") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(g => jobs.merge(g, 1, (a: Integer, b: Integer) => a + b))
-    }
-    def inGroup[A](group: String)(body: => A): A = {
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-    }
     val env = freshEnv("main_jobs")
     val cfg = EtlConfig.fromEnv(env).toOption.get
     val entry = sinks.ProcessingLog.entry("2024-01-15", 1L, 1L, "table_name", 1L, 1L,
       Seq("events_2024-01-15.csv"), java.sql.Timestamp.valueOf("2024-01-16 00:00:00"))
     // the first day in a JVM pays for class loading and codegen, not jobs;
-    // it runs outside the groups so the counted day is a steady one
+    // it runs uncounted so the counted day is a steady one
     assert(Main.run(Seq("--start-date", "2024-01-16"), spark, env, _ => ()) == 0)
-    sc.addSparkListener(listener)
-    val (rc, outLines) =
-      try {
-        val day = inGroup("graft-main-day") {
-          collectOut(o => Main.run(Seq("--start-date", "2024-01-15"), spark, env, o))
-        }
-        inGroup("graft-main-audit")(sinks.ProcessingLog.appendJdbc(Seq(entry), cfg.jdbcLog))
-        day
-      } finally {
-        org.apache.spark.sql.graftfn.PlanBridge.drainListenerBus(sc)
-        sc.removeSparkListener(listener)
-      }
+    val ((rc, outLines), dayJobs) =
+      countJobs(collectOut(o => Main.run(Seq("--start-date", "2024-01-15"), spark, env, o)))
+    val (_, auditJobs) = countJobs(sinks.ProcessingLog.appendJdbc(Seq(entry), cfg.jdbcLog))
     assert(rc == 0, outLines.mkString("\n"))
-    val dayJobs = Option(jobs.get("graft-main-day")).map(_.toInt).getOrElse(0)
     assert(dayJobs > 0 && dayJobs <= 3, s"$dayJobs Spark jobs in one CLI day")
-    assert(!jobs.containsKey("graft-main-audit"), s"audit append started ${jobs.get("graft-main-audit")} job(s)")
+    assert(auditJobs == 0, s"audit append started $auditJobs job(s)")
     // the per-day funnel line: date first, rows read, duplicates, empty columns
     val line = outLines.filter(_.startsWith("2024-01-15:"))
     assert(line.length == 1 && !line.head.contains("FAILED"), outLines.mkString("\n"))

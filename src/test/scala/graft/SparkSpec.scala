@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftfn.PlanBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole forked test JVM. */
@@ -14,4 +16,28 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = "/root/testdata/sf0.001"
+
+  /** `body`'s result and the number of Spark jobs it started: a listener
+    * counts the jobs of a job group set around `body` alone, and the
+    * count is read once the listener bus has drained. */
+  def countJobs[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"graft-count-jobs-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val result = body
+      PlanBridge.drainListenerBus(sc)
+      (result, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
